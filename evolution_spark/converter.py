@@ -18,7 +18,8 @@ engine implements all four targets plus the FLF re-encode sink:
   analogue); avro — native container-file codec (``io/avro.py``), no
   spark-avro module needed
 
-Whole pipeline: ``spark.read.text`` -> one codegen'd projection -> sink.
+Whole pipeline: ``spark.read.text`` -> one codegen'd stage (field text, then
+typed value) -> sink.
 Narrow (shuffle-free), scales linearly with input splits; every task writes
 its own part file, so the reference's single-writer thread (converter.rs:295-298)
 has no analogue here. ``single_file=True`` restores one-output-file parity via
@@ -36,7 +37,14 @@ from pyspark.sql import DataFrame, SparkSession
 
 from evolution_spark.io.avro import write_avro
 from evolution_spark.io.delta_log import write_delta_snapshot
-from evolution_spark.io.flf import read_flf, scoped_max_partition_bytes, write_flf
+from evolution_spark.io.flf import (
+    raw_field,
+    read_flf,
+    scoped_max_partition_bytes,
+    split_fields,
+    typed_field,
+    write_flf,
+)
 from evolution_spark.io.ipc import write_ipc
 from evolution_spark.schema import FixedSchema
 
@@ -117,23 +125,23 @@ class Converter:
         """
         from pyspark.sql import functions as F
 
-        from evolution_spark.io.flf import parse_column
-
-        lines = spark.read.text(self.input_path)
-        checks = []
-        for c in self.schema.columns:
-            if c.is_nullable or c.dtype in ("Utf8", "LargeUtf8"):
-                continue
-            typed = parse_column(F.col("value"), c, mode="permissive")
-            raw = F.substring(F.col("value"), c.offset + 1, c.length)
-            checks.append(
-                F.when(typed.isNull(), F.struct(F.lit(c.name).alias("column"), raw.alias("raw_field")))
+        fields, texts = split_fields(spark.read.text(self.input_path), self.schema)
+        line = F.col("value")
+        checks = [
+            F.when(
+                typed_field(text, line, c).isNull(),
+                F.struct(
+                    F.lit(c.name).alias("column"), raw_field(line, c).alias("raw_field")
+                ),
             )
+            for text, c in zip(texts, self.schema.columns)
+            if not c.is_nullable and c.dtype not in ("Utf8", "LargeUtf8")
+        ]
         if not checks:
             return spark.createDataFrame([], "line string, column string, raw_field string")
         failures = (
-            lines.select(
-                F.col("value").alias("line"),
+            fields.select(
+                line.alias("line"),
                 F.explode(
                     F.filter(F.array(*checks), lambda x: x.isNotNull())
                 ).alias("f"),

@@ -16,9 +16,14 @@ This module is the Spark-native realization of the reference's entire dataflow
 * ``encode_flf``/``write_flf`` — O13: the inverse converter
   (crates/evolution-writer/src/writer.rs:35-182).
 
-Everything is a single ``select`` of JVM-side column expressions: shuffle-free,
-whole-stage-codegen'd, and scale-linear — one task per file split, no Python in
-the hot path.
+Parse and encode are each two ``select``s of JVM-side column expressions:
+first every field's text (extracted and pad-trimmed, or rendered), then the
+typed value (or padded field) over references to that text. Catalyst does not
+share sub-expressions across ``CASE WHEN`` branches, so a single ``select``
+would recompute a field's text in every branch that reads it; the split
+computes each field once. Both projections fuse into one
+whole-stage-codegen'd stage: shuffle-free and scale-linear — one task per file
+split, no Python in the hot path.
 
 Compressed input: ``spark.read.text`` decompresses ``.gz``/``.bz2``/... FLF
 transparently (tested in test_flf.py). A gzip file is NOT splittable — one
@@ -39,20 +44,32 @@ Semantics divergences from the reference (documented per SURVEY.md §7):
 from __future__ import annotations
 
 from contextlib import contextmanager
-from typing import Iterable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from evolution_spark.schema import FixedColumn, FixedSchema
 
-_INT_BOUNDS = {
-    "Int16": (-(2**15), 2**15 - 1),
-    "Int32": (-(2**31), 2**31 - 1),
-    "Int64": (-(2**63), 2**63 - 1),
+# try_cast targets (ANSI: out-of-range values and "" become NULL, so no
+# separate bounds or empty-text checks are needed).
+_CAST_TYPES = {
+    "Int16": "smallint",
+    "Int32": "int",
+    "Int64": "bigint",
+    "Float16": "float",
+    "Float32": "float",
+    "Float64": "double",
 }
 
 _INT_RE = r"^-?[0-9]+$"  # optional '-' + digit run (FIXTURES.md oracle rule 3)
+
+_STRING_DTYPES = ("Utf8", "LargeUtf8")
+
+
+def _text_names(n: int) -> list[str]:
+    """Internal names of the per-field text columns between the two
+    projections of a parse or an encode."""
+    return [f"__flf_text_{i}" for i in range(n)]
 
 
 def _strip(col: Column, pad: str, side: str) -> Column:
@@ -79,82 +96,88 @@ def trim_padding(col: Column, column: FixedColumn) -> Column:
     return _strip(col, column.pad_char, side)
 
 
-def _cast_trimmed(trimmed: Column, column: FixedColumn, raw: Column | None = None) -> Column:
-    """Cast the trimmed field text to the column's Spark type.
+def raw_field(line: Column, column: FixedColumn) -> Column:
+    """The field's runes [offset, offset+length) — ``substring`` is 1-based
+    and codepoint-counting, so rune semantics come for free."""
+    return F.substring(line, column.offset + 1, column.length)
+
+
+def split_fields(
+    df: DataFrame, schema: FixedSchema, column: str = "value"
+) -> tuple[DataFrame, list[Column]]:
+    """First projection: the line column plus each field's pad-trimmed text.
+
+    Returns the projected frame and, per schema column, a reference to its
+    text. Consumers build on these references, so each field is extracted
+    and trimmed exactly once however often the next projection reads it.
+    """
+    line = F.col(column)
+    names = _text_names(len(schema.columns))
+    fields = df.select(
+        line,
+        *[
+            trim_padding(raw_field(line, c), c).alias(n)
+            for c, n in zip(schema.columns, names)
+        ],
+    )
+    return fields, [F.col(n) for n in names]
+
+
+def typed_field(text: Column, line: Column, column: FixedColumn) -> Column:
+    """Cast a field's pad-trimmed text (a column reference) to its Spark type.
 
     Boolean is strict (exactly ``true``/``false``, reference
     datatype.rs:62-67 — Spark's native boolean cast is laxer, accepting
     t/f/1/0/yes/no, so it is NOT used). Ints are gated on a sign+digit regex
-    with bounds checks (overflow -> failure, matching ``atoi_simd`` ``None``).
+    (Spark's cast would also take a leading ``+`` and surrounding
+    whitespace), then
+    ``try_cast`` straight to the target type: overflow -> NULL, matching
+    ``atoi_simd``'s ``None``. Floats are one ``try_cast`` (``""`` -> NULL).
     Utf8/LargeUtf8 never fail (datatype.rs:170-175).
     """
     dt = column.dtype
     if dt == "Boolean":
-        return (
-            F.when(trimmed == "true", F.lit(True))
-            .when(trimmed == "false", F.lit(False))
-            .otherwise(F.lit(None).cast("boolean"))
-        )
-    if dt in _INT_BOUNDS:
-        lo, hi = _INT_BOUNDS[dt]
+        return F.when(text == "true", F.lit(True)).when(text == "false", F.lit(False))
+    if dt in _STRING_DTYPES:
+        return text
+    if dt.startswith("Float"):
+        return text.try_cast(_CAST_TYPES[dt])
+    digits = F.when(text.rlike(_INT_RE), text)
+    if column.pad_char.isdigit():
         # Digit pad symbols: an all-pad field trims to "" but is a valid
         # number in the reference's digit-run scan (trimmer.rs:111-167 —
         # "000000" with Zero pad is the value 0, "555555" with Five pad is
-        # 555555). Fall back to the raw field when the trim consumed
-        # everything and the raw text is numeric.
-        source = trimmed
-        if raw is not None and column.pad_char.isdigit():
-            source = F.when((trimmed == "") & raw.rlike(_INT_RE), raw).otherwise(trimmed)
-        as_big = F.when(source.rlike(_INT_RE), source).otherwise(F.lit(None)).try_cast("bigint")
-        in_range = as_big.isNotNull() & as_big.between(lo, hi)
-        target = {"Int16": "smallint", "Int32": "int", "Int64": "bigint"}[dt]
-        return F.when(in_range, as_big).otherwise(F.lit(None)).cast(target)
-    if dt in ("Float16", "Float32"):
-        return F.when(trimmed == "", F.lit(None)).otherwise(trimmed).try_cast("float")
-    if dt == "Float64":
-        return F.when(trimmed == "", F.lit(None)).otherwise(trimmed).try_cast("double")
-    # Utf8 / LargeUtf8: identity after trim; never fails.
-    return trimmed
+        # 555555). The raw field is then all pad digits (or empty on a
+        # short line, which casts to NULL); only that rare branch
+        # re-extracts it.
+        digits = F.when(text == "", raw_field(line, column)).otherwise(digits)
+    return digits.try_cast(_CAST_TYPES[dt])
 
 
-def parse_column(raw_line: Column, column: FixedColumn, mode: str = "abort") -> Column:
-    """Full per-column pipeline: extract runes [offset, offset+length) ->
-    pad-trim -> strict cast -> nullability enforcement.
+def _parse_field(text: Column, line: Column, column: FixedColumn, mode: str) -> Column:
+    """Typed value plus nullability enforcement (reference
+    crates/evolution-builder/src/datatype.rs:72-82).
 
     ``mode='abort'``: a cast failure on a non-nullable column raises at
-    execution time via ``raise_error`` — a single-pass, distributed analogue of
-    the reference's conversion abort (column.rs:123-131) with the failing
-    column and raw value in the message. ``mode='permissive'``: failures become
-    NULL everywhere.
+    execution time via ``raise_error`` — a single-pass, distributed analogue
+    of the reference's conversion abort (column.rs:123-131) with the failing
+    column and raw value in the message. ``coalesce`` evaluates the error
+    (and its raw-field extraction) only for a NULL value, so the job aborts
+    on the first failing row with no extra work on valid ones.
+    ``mode='permissive'``: failures become NULL everywhere.
     """
-    # substring is 1-based and codepoint-counting -> rune semantics for free.
-    raw = F.substring(raw_line, column.offset + 1, column.length)
-    trimmed = trim_padding(raw, column)
-    typed = _cast_trimmed(trimmed, column, raw=raw)
-    if column.dtype in ("Utf8", "LargeUtf8"):
+    typed = typed_field(text, line, column)
+    if column.is_nullable or mode == "permissive" or column.dtype in _STRING_DTYPES:
         return typed.alias(column.name)
-    if column.is_nullable or mode == "permissive":
-        return typed.alias(column.name)
-    failure = typed.isNull()
-    # raise_error has NullType, so the when() coerces to `typed`'s type; the
-    # job aborts on the first failing row — single-pass, no extra scan.
-    return (
-        F.when(
-            failure,
-            F.raise_error(
-                F.concat(
-                    F.lit(
-                        f"could not parse non-nullable column '{column.name}' "
-                        f"(dtype {column.dtype}) from field value '"
-                    ),
-                    raw,
-                    F.lit("'"),
-                )
-            ),
-        )
-        .otherwise(typed)
-        .alias(column.name)
+    message = F.concat(
+        F.lit(
+            f"could not parse non-nullable column '{column.name}' "
+            f"(dtype {column.dtype}) from field value '"
+        ),
+        raw_field(line, column),
+        F.lit("'"),
     )
+    return F.coalesce(typed, F.raise_error(message)).alias(column.name)
 
 
 def parse_flf(
@@ -163,16 +186,25 @@ def parse_flf(
     column: str = "value",
     mode: str = "abort",
 ) -> DataFrame:
-    """Parse a DataFrame of raw FLF lines into a typed DataFrame.
+    """Parse a DataFrame of raw FLF lines into a typed DataFrame
+    (reference operators O3-O10).
 
-    One ``select`` containing every column's extract+trim+cast expression —
-    the whole of reference operators O3-O10 — which Catalyst fuses into a
-    single whole-stage-codegen'd projection over the scan.
+    Two projections: :func:`split_fields` extracts and pad-trims each
+    field, then each typed value is cast from a reference to that text.
+    Catalyst does not share sub-expressions across ``CASE WHEN`` branches,
+    so one projection would recompute a field's extract+trim in every
+    branch that reads it (the regex gate, the cast, the abort check).
+    The optimizer keeps the projections apart exactly when some text is
+    read more than once, and both fuse into one whole-stage-codegen'd stage
+    over the scan.
     """
     if mode not in ("abort", "permissive"):
         raise ValueError(f"unknown mode {mode!r} (expected 'abort' or 'permissive')")
+    fields, texts = split_fields(df, schema, column)
     line = F.col(column)
-    return df.select(*[parse_column(line, c, mode=mode) for c in schema.columns])
+    return fields.select(
+        *[_parse_field(t, line, c, mode) for t, c in zip(texts, schema.columns)]
+    )
 
 
 def read_flf(
@@ -408,28 +440,33 @@ def encode_flf(
     single-string-column DataFrame ready for ``write.text``.
     """
     jvm_shortest = float_format == "plain" and _jvm_emits_shortest(df.sparkSession)
+    layout = sorted(schema.columns, key=lambda c: c.offset)
+    names = _text_names(len(layout))
     pieces: list[Column] = []
     cursor = 0
-    for c in sorted(schema.columns, key=lambda c: c.offset):
+    for c, name in zip(layout, names):
         if c.offset < cursor:
             raise ValueError(
                 f"overlapping columns at offset {c.offset} (column {c.name!r})"
             )
         if c.offset > cursor:
             pieces.append(F.lit(" " * (c.offset - cursor)))
-        pieces.append(
-            pad_field(
-                _value_as_text(
-                    F.col(c.name), c, float_format=float_format, jvm_shortest=jvm_shortest
-                ),
-                c,
-                overflow=overflow,
-            )
-        )
+        pieces.append(pad_field(F.col(name), c, overflow=overflow))
         cursor = c.offset + c.length
     if cursor < schema.row_length:
         pieces.append(F.lit(" " * (schema.row_length - cursor)))
-    return df.select(F.concat(*pieces).alias(out_column))
+    # Field text first, padding second: pad_field reads its text up to four
+    # times (width, padding, overflow check, error message), and a reference
+    # to a projected column renders each value once.
+    texts = df.select(
+        *[
+            _value_as_text(
+                F.col(c.name), c, float_format=float_format, jvm_shortest=jvm_shortest
+            ).alias(name)
+            for c, name in zip(layout, names)
+        ]
+    )
+    return texts.select(F.concat(*pieces).alias(out_column))
 
 
 def write_flf(
@@ -451,7 +488,3 @@ def write_flf(
     if single_file:
         encoded = encoded.coalesce(1)
     encoded.write.mode(mode).text(path)
-
-
-def columns_in_layout_order(schema: FixedSchema) -> Iterable[FixedColumn]:
-    return sorted(schema.columns, key=lambda c: c.offset)

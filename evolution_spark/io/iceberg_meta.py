@@ -3018,6 +3018,25 @@ def _commit_iceberg_snapshot(
                         sf.name, F.lit(fills[sf.name]).cast(sf.dataType)
                     )
             df = df.select(*[f.name for f in expected.fields])
+    # Iceberg has no 8/16-bit int: a table created from a short/byte column
+    # stores `int` (_TO_ICEBERG), so a batch of the same shape widens to it.
+    # Every other type difference still fails the strict check below.
+    narrow = {
+        a.name
+        for a, b in zip(df.schema, expected.fields)
+        if a.name == b.name
+        and isinstance(a.dataType, (T.ShortType, T.ByteType))
+        and isinstance(b.dataType, T.IntegerType)
+    }
+    if narrow:
+        from pyspark.sql import functions as F
+
+        df = df.select(
+            *[
+                F.col(n).cast("int").alias(n) if n in narrow else F.col(n)
+                for n in df.columns
+            ]
+        )
     if [f.name for f in df.schema] != [f.name for f in expected.fields] or any(
         a.dataType != b.dataType for a, b in zip(df.schema, expected.fields)
     ):

@@ -128,6 +128,10 @@ class Mocker:
         # Float16/32), so a decimal cast + trailing-zero strip IS the shortest
         # round-trip form — no pandas UDF in the 1M-rows/s hot path, and the
         # output is a fixpoint under parse -> re-encode(float_format='plain').
+        # A decimal(p,3) string always has a '.' and three fraction digits,
+        # so stripping trailing '0's stops at the '.' at the latest, and
+        # stripping a trailing '.' then leaves an integral value bare: two
+        # char-set trims, no regex.
         def render_float(c):
             dec = (
                 F.col(c.name)
@@ -135,8 +139,7 @@ class Mocker:
                        "Float64": "decimal(13,3)"}[c.dtype])
                 .cast("string")
             )
-            no_zeros = F.regexp_replace(dec, r"(\.\d*?)0+$", r"$1")
-            return F.regexp_replace(no_zeros, r"\.$", "").alias(c.name)
+            return F.rtrim(F.rtrim(dec, F.lit("0")), F.lit(".")).alias(c.name)
 
         rendered = df.select(
             *[

@@ -3,11 +3,11 @@
 directory are parsed with the same strict semantics and appended to a
 Parquet (or any) sink continuously.
 
-The parse is the identical ``parse_flf`` expression set used in batch
-(io/flf.py): one narrow codegen'd projection per micro-batch, no state, no
-shuffle — at cluster scale this sustains scan-rate conversion with
-end-to-end exactly-once into the parquet sink (checkpointed file source +
-transactional file sink)."""
+The parse is the identical ``parse_flf`` used in batch (io/flf.py): two
+narrow projections (field text, then typed value) fused into one codegen'd
+stage per micro-batch, no state, no shuffle — at cluster scale this sustains
+scan-rate conversion with end-to-end exactly-once into the parquet sink
+(checkpointed file source + transactional file sink)."""
 
 from __future__ import annotations
 

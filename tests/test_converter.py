@@ -375,6 +375,40 @@ def test_iceberg_target_via_converter(spark, tmp_path):
     assert back.exceptAll(ref).count() == 0 and ref.exceptAll(back).count() == 0
 
 
+def test_iceberg_append_int16_batch(spark, tmp_path):
+    """Iceberg has no 16-bit int, so the table stores an Int16 column as
+    `int`; appending another parsed batch (Spark `short`) widens it to the
+    table type. Any other type difference is still refused."""
+    from evolution_spark.io.iceberg_meta import append_iceberg_snapshot, read_iceberg_table
+
+    sch = FixedSchema.from_dict(
+        {"name": "i16", "version": 1, "columns": [
+            {"name": "id", "offset": 0, "length": 6, "dtype": "Int32", "is_nullable": False},
+            {"name": "small", "offset": 6, "length": 6, "dtype": "Int16", "is_nullable": True}]}
+    )
+    batches = [[(1, -32768), (2, 7), (3, None)], [(4, 32767), (5, 0)]]
+    out = str(tmp_path / "itab")
+    for i, rows in enumerate(batches):
+        src = tmp_path / f"b{i}.flf"
+        src.write_text("".join(
+            f"{k:>6}{'' if v is None else v:>6}\n" for k, v in rows
+        ))
+        Converter(
+            str(src), sch, out, target=Target.ICEBERG,
+            save_mode="append" if i else "error",
+        ).run(spark)
+    back = read_iceberg_table(spark, out)
+    assert dict(back.dtypes)["small"] == "int"
+    assert sorted(tuple(r) for r in back.collect()) == sorted(batches[0] + batches[1])
+    with pytest.raises(ValueError, match="schema mismatch"):
+        append_iceberg_snapshot(
+            spark.range(1).select(
+                F.col("id").cast("int").alias("id"), F.col("id").alias("small")
+            ),
+            out,
+        )
+
+
 def test_iceberg_metadata_chain_and_jvm_crossread(spark, tmp_path):
     """The native Iceberg writer's metadata is structurally spec-shaped
     (format-version 2, schema field-ids, partition spec, snapshot ->

@@ -5,13 +5,17 @@ numbers, zero padding, strict booleans, center alignment, non-nullable abort).
 
 from __future__ import annotations
 
+import json
 import math
+from concurrent.futures import ThreadPoolExecutor
+from pathlib import Path
 
 import pytest
 from pyspark.errors import PySparkException
+from pyspark.sql import functions as F
 
 from evolution_spark.io.flf import encode_flf, parse_flf, read_flf, write_flf
-from evolution_spark.schema import FixedSchema
+from evolution_spark.schema import BENCH_FLF_SCHEMA_DICT, PAD_SYMBOLS, FixedSchema
 
 EDGE = FixedSchema.from_dict(
     {
@@ -35,6 +39,85 @@ EDGE = FixedSchema.from_dict(
 
 def _lines_df(spark, lines):
     return spark.createDataFrame([(l,) for l in lines], ["value"])
+
+
+# Equivalence grid: every non-string dtype x alignment x {blank, digit} pad,
+# each field holding one of GRID_TOKENS padded to GRID_WIDTH runes. The
+# expected values (flf_parse_grid.json, repr per token) were recorded with
+# _grid_values against the earlier single-projection parse_flf, whose typed
+# expressions recomputed each field per CASE branch; the two-projection
+# parse must agree with it cell for cell.
+GRID_WIDTH = 24
+GRID_TOKENS = (
+    "+5", " 5", "5 ", "-", "--1", "1.5", "", "0", "-0", "007",
+    "-32769", "-32768", "32767", "32768",
+    "-2147483649", "-2147483648", "2147483647", "2147483648",
+    "-9223372036854775809", "-9223372036854775808",
+    "9223372036854775807", "9223372036854775808",
+    "NaN", "Infinity", "-Infinity", "inf", "1e3", "true", "TRUE", "false",
+)
+GRID_DTYPES = ("Boolean", "Float16", "Float32", "Float64", "Int16", "Int32", "Int64")
+GRID_COLUMNS = [
+    (dt, al, pad)
+    for dt in GRID_DTYPES
+    for al in ("Left", "Right", "Center")
+    for pad in ("Whitespace", "Zero")
+]
+GRID_EXPECTED = Path(__file__).with_name("flf_parse_grid.json")
+
+
+def _grid_name(dtype, alignment, pad):
+    return f"{dtype}_{alignment}_{pad}"
+
+
+def _grid_schema(columns, nullable):
+    return FixedSchema.from_dict({"name": "Grid", "version": 1, "columns": [
+        {"name": _grid_name(dt, al, pad), "offset": i * GRID_WIDTH,
+         "length": GRID_WIDTH, "dtype": dt, "alignment": al,
+         "pad_symbol": pad, "is_nullable": nullable}
+        for i, (dt, al, pad) in enumerate(columns)
+    ]})
+
+
+def _grid_field(token, alignment, pad):
+    fill = GRID_WIDTH - len(token)
+    left = {"Left": 0, "Right": fill, "Center": fill // 2}[alignment]
+    sym = PAD_SYMBOLS[pad]
+    return sym * left + token + sym * (fill - left)
+
+
+def _grid_line(columns, tokens):
+    return "".join(
+        _grid_field(tok, al, pad) for (_, al, pad), tok in zip(columns, tokens)
+    )
+
+
+def _grid_text_df(spark, tmp_path, lines):
+    """Lines read back from a text file: the scan -> projection plan
+    ``Converter`` runs (an in-memory relation would be folded on the
+    driver instead)."""
+    p = tmp_path / "grid.flf"
+    p.write_text("".join(l + "\n" for l in lines))
+    return spark.read.text(str(p))
+
+
+def _grid_parse(spark, tmp_path, columns, lines, nullable, mode):
+    """Parse ``lines`` in line order -> list of row tuples."""
+    df = parse_flf(
+        _grid_text_df(spark, tmp_path, lines), _grid_schema(columns, nullable), mode=mode
+    )
+    rows = df.select(F.monotonically_increasing_id().alias("_i"), "*").collect()
+    return [tuple(r)[1:] for r in sorted(rows)]
+
+
+def _grid_values(spark, tmp_path, columns=GRID_COLUMNS):
+    """Permissive parse of the grid -> {column name: [repr per token]}."""
+    lines = [_grid_line(columns, [t] * len(columns)) for t in GRID_TOKENS]
+    rows = _grid_parse(spark, tmp_path, columns, lines, True, "permissive")
+    return {
+        _grid_name(*c): [repr(row[i]) for row in rows]
+        for i, c in enumerate(columns)
+    }
 
 
 def test_edge_cases_parse(spark):
@@ -276,3 +359,114 @@ def test_gzipped_flf_input(spark, tmp_path):
     got = Converter(str(gzdir), sch, "unused").dataframe(spark)
     assert got.count() == 200
     assert got.exceptAll(ref).count() == 0 and ref.exceptAll(got).count() == 0
+
+
+def _dtype_columns(dtype):
+    return [c for c in GRID_COLUMNS if c[0] == dtype]
+
+
+@pytest.mark.parametrize("dtype", GRID_DTYPES)
+def test_parse_grid_matches_recorded(spark, tmp_path, dtype):
+    """Every dtype x alignment x pad x token cell parses to the recorded
+    value (compared by repr, so NaN equals NaN)."""
+    recorded = json.loads(GRID_EXPECTED.read_text())
+    assert recorded["tokens"] == list(GRID_TOKENS)
+    got = _grid_values(spark, tmp_path, _dtype_columns(dtype))
+    assert got == {n: recorded["expected"][n] for n in got}
+
+
+@pytest.mark.parametrize("dtype", GRID_DTYPES)
+def test_parse_grid_abort_raises_exactly_on_failures(spark, tmp_path, dtype):
+    """With every field non-nullable, mode='abort' returns the recorded
+    value for each cell that parses and raises, naming the column, for each
+    cell that does not."""
+    columns = _dtype_columns(dtype)
+    names = [_grid_name(*c) for c in columns]
+    expected = json.loads(GRID_EXPECTED.read_text())["expected"]
+    ok = {n: [t for t, v in zip(GRID_TOKENS, expected[n]) if v != "None"] for n in names}
+    bad = [(i, t) for i, n in enumerate(names)
+           for t, v in zip(GRID_TOKENS, expected[n]) if v == "None"]
+    assert all(ok.values()) and bad
+
+    def good_tokens(k):  # row k: each column cycles through its valid tokens
+        return [ok[n][k % len(ok[n])] for n in names]
+
+    # Valid cells, as one scan job: nothing raises, values match.
+    depth = max(len(v) for v in ok.values())
+    rows = _grid_parse(
+        spark, tmp_path, columns,
+        [_grid_line(columns, good_tokens(k)) for k in range(depth)], False, "abort",
+    )
+    for k, row in enumerate(rows):
+        for i, n in enumerate(names):
+            tok = good_tokens(k)[i]
+            assert repr(row[i]) == expected[n][GRID_TOKENS.index(tok)], (n, tok)
+
+    # Failing cells, one per parse of that field alone. A one-row inline
+    # table is evaluated on the driver (no task launch), so each cell costs
+    # one plan build and optimizer pass; a few threads overlap them.
+    def raises_naming(cell):
+        i, tok = cell
+        _, al, pad = columns[i]
+        line = spark.sql(
+            "SELECT * FROM VALUES (:l) AS t(value)", args={"l": _grid_field(tok, al, pad)}
+        )
+        try:
+            parse_flf(line, _grid_schema([columns[i]], False)).collect()
+        except PySparkException as e:
+            return f"column '{names[i]}'" in str(e)
+        return False
+
+    with ThreadPoolExecutor(4) as pool:
+        outcome = dict(zip(bad, pool.map(raises_naming, bad)))
+    assert [c for c, hit in outcome.items() if not hit] == []
+
+    # And the scan plan raises too, naming the first failing cell's column.
+    i, tok = bad[0]
+    tokens = good_tokens(0)
+    tokens[i] = tok
+    with pytest.raises(PySparkException, match=f"column '{names[i]}'"):
+        _grid_parse(
+            spark, tmp_path, columns, [_grid_line(columns, tokens)], False, "abort"
+        )
+
+
+def _executed_plan(df):
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+PLAN_SCHEMAS = pytest.mark.parametrize(
+    "schema", [FixedSchema.from_dict(BENCH_FLF_SCHEMA_DICT), EDGE], ids=["bench", "edge"]
+)
+
+
+@PLAN_SCHEMAS
+def test_parse_plan_computes_each_field_once(spark, tmp_path, schema):
+    """The executed parse plan holds one regex gate per Int column and one
+    try_cast per numeric column: each field's text is extracted and trimmed
+    once and referenced from there, not recomputed per CASE branch."""
+    p = tmp_path / "one.flf"
+    p.write_text(" " * schema.row_length + "\n")
+    dtypes = [c.dtype for c in schema.columns]
+    n_int = sum(d.startswith("Int") for d in dtypes)
+    n_numeric = n_int + sum(d.startswith("Float") for d in dtypes)
+    for mode in ("abort", "permissive"):
+        plan = _executed_plan(parse_flf(spark.read.text(str(p)), schema, mode=mode))
+        assert plan.count("RLIKE(") == n_int, plan
+        assert plan.count("try_cast(") == n_numeric, plan
+        assert plan.count("trim(") == len(dtypes), plan
+
+
+@PLAN_SCHEMAS
+def test_encode_plan_renders_each_field_once(spark, schema):
+    """Each column's text expression (``coalesce(<rendered value>, '')``
+    over a nullable input) appears once in the executed encode plan;
+    padding, width check and error message read it by reference."""
+    from pyspark.sql import types as T
+
+    nullable = T.StructType(
+        [T.StructField(f.name, f.dataType, True) for f in schema.to_spark_schema()]
+    )
+    df = spark.createDataFrame([tuple([None] * len(nullable))], nullable)
+    plan = _executed_plan(encode_flf(df, schema))
+    assert plan.count("coalesce(") == len(schema.columns), plan
