@@ -9,9 +9,10 @@ snapshot (version 0) of a DataFrame:
 
 * data files: a normal distributed ``df.write.parquet`` — cluster-scale,
   nothing driver-bound;
-* the commit: the driver lists the written files (a metadata-sized
+* the commit: the driver moves the staged files in (a metadata-sized
   operation — one entry per file), derives per-file ``numRecords`` from
-  parquet footers, and writes the log atomically (temp file + rename).
+  parquet footers, and publishes the log atomically and exclusively
+  (temp file + fsync + ``os.link``, in ``_publish_commit``).
 
 ``metaData.schemaString`` is Spark's ``StructType.json()`` — the Delta
 spec adopts Spark's schema JSON verbatim, so the round-trip is exact.
@@ -373,31 +374,6 @@ def _partition_value(raw: str) -> str | None:
     return unquote(raw)
 
 
-def _data_files(table_dir: Path, part_cols: list[str]):
-    """Yield (relative_path, partition_values, size_bytes) for every data
-    file under the table dir, parsing hive-style partition directories."""
-    for p in sorted(table_dir.rglob("*.parquet")):
-        if "_delta_log" in p.parts or "_change_data" in p.parts or any(
-            part.startswith("_staging_") for part in p.parts
-        ):
-            # _change_data sidecars are referenced by cdc actions, never
-            # by add actions — retention is tied to the log (which this
-            # engine never truncates), not to live-set membership
-            continue
-        rel = p.relative_to(table_dir)
-        values: dict[str, str | None] = {}
-        for part in rel.parts[:-1]:
-            if "=" in part:
-                k, _, v = part.partition("=")
-                values[k] = _partition_value(v)
-        if sorted(values) != sorted(part_cols):
-            raise ValueError(
-                f"partition dirs {sorted(values)} != declared {sorted(part_cols)}"
-            )
-        yield rel.as_posix(), values, p.stat().st_size
-
-
-
 def _file_stats(pq_file) -> dict:
     """Delta-spec add-action stats from a parquet footer: numRecords plus
     per-column minValues/maxValues (int/float/string/bool columns only —
@@ -465,6 +441,11 @@ def write_delta_snapshot(
 ) -> dict:
     """Write ``df`` as a version-0 Delta table at ``path``.
 
+    Creation is the first commit of the shared append path: this builds
+    the ``protocol`` and ``metaData`` actions, stages the data like
+    ``commit_delta`` (``_collect_staged_adds`` at version 0) and
+    publishes through ``_publish_commit``.
+
     ``mode``: ``error`` refuses an existing table dir; ``overwrite``
     replaces it (fresh snapshot — still one commit). Returns the commit
     summary (version, file count, row count) for logging/tests.
@@ -478,8 +459,6 @@ def write_delta_snapshot(
     commits later. Partitioned mapped tables follow the spec layout:
     directory names AND ``partitionColumns`` AND ``partitionValues`` all
     use the PHYSICAL partition column name."""
-    import pyarrow.parquet as pq
-
     table_dir = Path(path)
     if table_dir.exists():
         if mode == "overwrite":
@@ -521,7 +500,7 @@ def write_delta_snapshot(
         df = df.withColumnsRenamed(phys_of)
         # the spec keys the partition LAYOUT by physical name: directory
         # names, metaData.partitionColumns, and add.partitionValues below
-        # (via _data_files) all carry the physical partition column
+        # (via _collect_staged_adds) all carry the physical partition column
         part_cols = [phys_of.get(c, c) for c in part_cols]
     if _cdf_enabled(config):
         # feature-activation rule: the property obliges writers to emit
@@ -529,11 +508,6 @@ def write_delta_snapshot(
         upgrade = _cdf_protocol_upgrade(protocol)
         if upgrade:
             protocol = upgrade["protocol"]
-    writer = df.write.mode("error")
-    if part_cols:
-        writer = writer.partitionBy(*part_cols)
-    writer.parquet(str(table_dir))
-
     now_ms = int(time.time() * 1000)
     actions: list[dict] = []
     actions.append(
@@ -593,50 +567,49 @@ def write_delta_snapshot(
             }
         }
     )
-    total_rows = 0
-    n_files = 0
-    no_stats: list[str] = []
-    for rel, values, size in _data_files(table_dir, part_cols):
-        try:
-            stats = _file_stats(pq.ParquetFile(table_dir / rel))
-            total_rows += stats["numRecords"]
-        except Exception:
-            # footer carries a logical type pyarrow cannot parse (e.g.
-            # VARIANT) — per-file counts come from one Spark scan below
-            no_stats.append(rel)
-            stats = None
-        n_files += 1
-        add = {
-            # the spec stores paths relative + URL-encoded
-            "path": quote(rel),
-            "partitionValues": values,
-            "size": size,
-            "modificationTime": now_ms,
-            "dataChange": True,
-        }
-        if stats is not None:
-            add["stats"] = json.dumps(stats)
-        actions.append({"add": add})
-    if no_stats:
-        total_rows += _backfill_stats_via_count(
-            df.sparkSession, table_dir,
-            [table_dir / rel for rel in no_stats], actions,
+    # staged exactly like commit_delta: a private uuid-suffixed dir whose
+    # shards move in under version-stamped names
+    stage = table_dir / f"_staging_v0-{uuid.uuid4().hex}"
+    writer = df.write.mode("error")
+    if part_cols:
+        writer = writer.partitionBy(*part_cols)
+    try:
+        writer.parquet(str(stage))
+        add_actions, n_files, total_rows = _collect_staged_adds(
+            stage, table_dir, 0, now_ms, True, spark=df.sparkSession
         )
-
-    log_dir = table_dir / "_delta_log"
-    log_dir.mkdir()
-    # creation-time in-commit-timestamp enablement: v0 itself must carry
-    # the stamp (spec: every commit after enablement)
-    actions = _stamp_ict(table_dir, 0, actions, config)
-    commit = log_dir / f"{0:020d}.json"
-    tmp = log_dir / f".{0:020d}.json.tmp"
-    tmp.write_text("".join(json.dumps(a) + "\n" for a in actions))
-    os.replace(tmp, commit)  # atomic publish: readers never see a torn log
+    finally:
+        if stage.exists():
+            shutil.rmtree(stage)
+    # creation-time in-commit-timestamp enablement: _publish_commit stamps
+    # v0 itself (spec: every commit after enablement)
+    commit = _publish_commit(
+        table_dir, 0, actions + add_actions, "create", config=config
+    )
     return {"version": 0, "files": n_files, "rows": total_rows, "path": str(commit)}
 
 
 def _log_versions(log_dir: Path) -> list[int]:
     return sorted(int(p.stem) for p in log_dir.glob("*.json") if p.stem.isdigit())
+
+
+def _commit_actions(log_dir: Path, version: int) -> list[dict]:
+    """The actions of JSON commit ``version`` — the one reader of
+    ``_delta_log/<version>.json``. Every published commit carries at
+    least one action, so a file with none is a torn or truncated commit:
+    replaying it as a valid empty version would hide the damage, so it
+    raises instead."""
+    commit = log_dir / f"{version:020d}.json"
+    actions = [
+        json.loads(line) for line in commit.read_text().splitlines()
+        if line.strip()
+    ]
+    if not actions:
+        raise RuntimeError(
+            f"Delta commit {commit} holds no actions — a torn or truncated "
+            "commit; refusing to replay it as an empty version"
+        )
+    return actions
 
 
 
@@ -738,8 +711,8 @@ def _replay_log(
     for v in versions:
         if v > target:
             break
-        for line in (log_dir / f"{v:020d}.json").read_text().splitlines():
-            _fold_action(json.loads(line), live, state)
+        for action in _commit_actions(log_dir, v):
+            _fold_action(action, live, state)
     _check_reader_protocol(state.get("protocol"), state.get("schema_string"))
     _validate_type_widening(state.get("schema_string"))
     out = (live, state.get("schema_string"), state.get("part_cols", []), target)
@@ -788,8 +761,8 @@ def last_txn_version(path: str, app_id: str) -> int | None:
     for v in _log_versions(log_dir):
         if v <= after:
             continue
-        for line in (log_dir / f"{v:020d}.json").read_text().splitlines():
-            _fold_action(json.loads(line), {}, state)
+        for action in _commit_actions(log_dir, v):
+            _fold_action(action, {}, state)
     tail = state.get("txns", {}).get(app_id)
     if tail is not None:
         best = tail if best is None else max(best, tail)
@@ -807,14 +780,16 @@ def commit_delta(
     operation: str = "WRITE",
     _rt_materialized: tuple[str, str] | None = None,
 ) -> dict:
-    """Commit a new version to an existing Delta table (create version 0 if
-    the table does not exist). ``mode='append'`` adds files; ``'overwrite'``
+    """Commit a new version to an existing Delta table (create version 0
+    through ``write_delta_snapshot`` if the table does not exist — the
+    same stage, ``_collect_staged_adds`` and ``_publish_commit`` steps
+    as every later version). ``mode='append'`` adds files; ``'overwrite'``
     also emits ``remove`` actions for every previously-live file;
     ``'replace'`` removes exactly ``remove_paths`` (stored log paths) — the
     partial-rewrite commit a file-pruned MERGE produces. Removes are
     logical deletes: old versions stay readable, which is what makes time
-    travel work. Publish is optimistic-concurrency: the commit file is written to
-    a temp name and atomically renamed; a version collision from a
+    travel work. Publish is optimistic-concurrency (``_publish_commit``:
+    temp file, fsync, exclusive link); a version collision from a
     concurrent writer surfaces as an error instead of a lost update.
 
     Scale: the data write is a normal distributed ``df.write.parquet`` into
@@ -2128,10 +2103,7 @@ def table_changes(
     for v in versions:
         if v > hi:
             break
-        acts = [
-            json.loads(line)
-            for line in (log_dir / f"{v:020d}.json").read_text().splitlines()
-        ]
+        acts = _commit_actions(log_dir, v)
         cdcs = [a["cdc"] for a in acts if "cdc" in a]
         if cdcs and v >= from_version:
             for c in cdcs:
@@ -2841,21 +2813,20 @@ def _stamp_ict(table_dir: Path, version: int, actions: list[dict],
     # spec-conformant chains stamp EVERY commit, so version-1 resolves in
     # one read; walking further back only happens on foreign chains with
     # unstamped (e.g. protocol-only) commits
+    log_dir = table_dir / "_delta_log"
     for v in range(version - 1, -1, -1):
-        prev_file = table_dir / "_delta_log" / f"{v:020d}.json"
-        if not prev_file.exists():
+        if not (log_dir / f"{v:020d}.json").exists():
             break  # retention-truncated: fall back to enablement property
-        saw_commit_info = False
-        for ln in prev_file.read_text().splitlines():
-            a = json.loads(ln)
-            if "commitInfo" in a:
-                saw_commit_info = True
-                prev = a["commitInfo"].get("inCommitTimestamp")
-                break
-        if prev is not None or saw_commit_info:
+        info = next(
+            (a["commitInfo"] for a in _commit_actions(log_dir, v)
+             if "commitInfo" in a),
+            None,
+        )
+        if info is not None:
             # an unstamped commitInfo marks the pre-enablement era — stop
             # (walking the whole history per commit would be O(log) reads
             # on late-enabled tables)
+            prev = info.get("inCommitTimestamp")
             break
     if prev is None:
         prev = int((config or {}).get(
@@ -2875,22 +2846,40 @@ def _stamp_ict(table_dir: Path, version: int, actions: list[dict],
 
 
 def _publish_commit(table_dir: Path, version: int, actions: list[dict],
-                    what: str, config: dict | None = None):
-    """create-EXCLUSIVE commit publish shared by every single-commit DML
-    path — a same-version race is a hard error for the loser. ``config``
-    (the table's resolved configuration) lets the publisher honor
-    configuration-driven commit obligations (in-commit timestamps)."""
+                    what: str, config: dict | None = None) -> Path:
+    """The ONE Delta commit publish: every commit this module writes —
+    table creation (version 0 of ``write_delta_snapshot`` and
+    ``clone_delta_table``), appends, DML and maintenance — lands here.
+    The commit is written in full to a private temp file in
+    ``_delta_log``, fsynced, then ``os.link``-ed to its final name: the
+    link is atomic AND exclusive, so readers never see a torn commit, a
+    failed write leaves no commit file behind (a retry at the same
+    version succeeds), and a same-version race is a hard error for every
+    loser. ``config`` (the table's resolved configuration) lets the
+    publisher honor configuration-driven commit obligations (in-commit
+    timestamps). Returns the commit path."""
     actions = _stamp_ict(table_dir, version, actions, config)
-    commit = table_dir / "_delta_log" / f"{version:020d}.json"
+    payload = "".join(json.dumps(a) + "\n" for a in actions).encode()
+    log_dir = table_dir / "_delta_log"
+    if version == 0:
+        log_dir.mkdir(parents=True, exist_ok=True)
+    commit = log_dir / f"{version:020d}.json"
+    tmp = log_dir / f".{version:020d}.json.{uuid.uuid4().hex}.tmp"
     try:
-        fd = os.open(commit, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError:
-        raise RuntimeError(
-            f"concurrent commit detected: {commit} exists (retry the "
-            f"{what} against the new table state)"
-        ) from None
-    with os.fdopen(fd, "w") as f:
-        f.write("".join(json.dumps(a) + "\n" for a in actions))
+        with open(tmp, "xb") as f:
+            f.write(payload)
+            f.flush()
+            os.fsync(f.fileno())
+        try:
+            os.link(tmp, commit)
+        except FileExistsError:
+            raise RuntimeError(
+                f"concurrent commit detected: {commit} exists (retry the "
+                f"{what} against the new table state)"
+            ) from None
+    finally:
+        tmp.unlink(missing_ok=True)
+    return commit
 
 
 def delete_delta_rows(spark, path: str, predicate: str) -> dict:
@@ -3402,11 +3391,8 @@ def vacuum_delta(
     # engine never truncates the log); the staleness window spares
     # in-flight commits, same as the DV rule above.
     referenced_cdc: set[str] = set()
-    for vf in sorted(log_dir.glob("*.json")):
-        if not vf.stem.isdigit():
-            continue
-        for line in vf.read_text().splitlines():
-            a = json.loads(line)
+    for v in _log_versions(log_dir):
+        for a in _commit_actions(log_dir, v):
             if "cdc" in a:
                 referenced_cdc.add(unquote(a["cdc"]["path"]))
     cdc_dir = table_dir / "_change_data"
@@ -3474,8 +3460,8 @@ def checkpoint_delta(
     live: dict[str, dict] = {}
     state: dict = {}
     for v in versions:
-        for line in (log_dir / f"{v:020d}.json").read_text().splitlines():
-            _fold_action(json.loads(line), live, state)
+        for action in _commit_actions(log_dir, v):
+            _fold_action(action, live, state)
     metadata_action = state.get("metadata")
     protocol_action = state.get("protocol")
     # refuse to checkpoint a table we cannot faithfully read: a checkpoint
@@ -3868,8 +3854,8 @@ def read_checkpoint_state(
                 f"{missing} are missing after checkpoint {ckpt_version}"
             )
     for v in post:
-        for line in (log_dir / f"{v:020d}.json").read_text().splitlines():
-            _fold_action(json.loads(line), live, state)
+        for action in _commit_actions(log_dir, v):
+            _fold_action(action, live, state)
         latest = v
     # The guard runs on the RESOLVED protocol (checkpoint row, overridden by
     # any post-checkpoint protocol-upgrade commit) — a foreign writer that
@@ -4213,7 +4199,10 @@ def clone_delta_table(
 
     Protocol, schema (incl. column-mapping metadata), partition columns
     and table configuration (CHECK constraints, appendOnly) carry over;
-    the clone gets a fresh table id. Refuses a source whose live adds
+    the clone gets a fresh table id. Its v0 publishes through
+    ``_publish_commit`` with the cloned configuration, so the
+    configuration's commit obligations (in-commit timestamps) hold from
+    the first commit. Refuses a source whose live adds
     carry deletion vectors (their descriptors resolve relative to the
     SOURCE root; cloning them would silently resurrect deleted rows —
     compact the source first)."""
@@ -4263,12 +4252,9 @@ def clone_delta_table(
             except (ValueError, TypeError):
                 pass
         actions.append({"add": add})
-    log_dir = dest_dir / "_delta_log"
-    log_dir.mkdir(parents=True)
-    commit = log_dir / f"{0:020d}.json"
-    tmp = log_dir / f".{0:020d}.json.tmp"
-    tmp.write_text("".join(json.dumps(a) + "\n" for a in actions))
-    os.replace(tmp, commit)  # atomic publish
+    commit = _publish_commit(
+        dest_dir, 0, actions, "clone", config=meta.get("configuration")
+    )
     return {
         "version": 0,
         "files": len(live),
@@ -5093,10 +5079,7 @@ def delta_table_history(spark, path: str) -> DataFrame:
         raise FileNotFoundError(f"no Delta log at {log_dir}")
     rows = []
     for v in versions:
-        acts = [
-            json.loads(line)
-            for line in (log_dir / f"{v:020d}.json").read_text().splitlines()
-        ]
+        acts = _commit_actions(log_dir, v)
         info = next((a["commitInfo"] for a in acts if "commitInfo" in a), {})
         rows.append((
             v,

@@ -557,7 +557,11 @@ class _StreamReader(DataSourceStreamReader):
         return {"version": latest, "snapshot_done": True}
 
     def partitions(self, start, end):
-        from evolution_spark.io.delta_log import _log_versions, _replay_log
+        from evolution_spark.io.delta_log import (
+            _commit_actions,
+            _log_versions,
+            _replay_log,
+        )
 
         table_dir = Path(self.path)
         log_dir = table_dir / "_delta_log"
@@ -622,8 +626,7 @@ class _StreamReader(DataSourceStreamReader):
 
         offending = []
         for v in present:
-            acts = [json.loads(l) for l in
-                    (log_dir / f"{v:020d}.json").read_text().splitlines()]
+            acts = _commit_actions(log_dir, v)
             parsed[v] = acts
             for a in acts:
                 md = a.get("metaData")
@@ -883,7 +886,7 @@ def _commit_shards(
     )
     from evolution_spark.io.delta_log import _check_writer_protocol
 
-    _check_writer_protocol(state.get("protocol"))
+    _check_writer_protocol(state.get("protocol"), schema_string)
     if written_schema_json is not None:
         # refuse loudly on a schema mismatch — committing shards with the
         # wrong columns would read back as silent all-null rows

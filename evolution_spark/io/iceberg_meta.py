@@ -661,6 +661,13 @@ def write_iceberg_table(
 ) -> dict:
     """Write ``df`` as a single-snapshot Iceberg v2 table at ``path``.
 
+    Creation is the first commit of the shared append path: the
+    version-0 metadata (schema, partition spec, properties with the name
+    mapping) is built in memory with no snapshot, the data is staged by
+    ``_stage_and_move`` at sequence number 1, and
+    ``_commit_files_as_snapshot`` publishes it as metadata version 0
+    with one ``append`` snapshot.
+
     ``distribute=True`` is the spec connector's ``write.distribution-mode
     = hash``: ONE shuffle clustering rows by partition value before the
     split, so each partition dir is written by one task — without it a
@@ -670,8 +677,6 @@ def write_iceberg_table(
 
     Returns a commit summary (snapshot id, files, rows) for tests/logs.
     """
-    import pyarrow.parquet as pq
-
     table_dir = Path(path)
     if table_dir.exists():
         if mode == "overwrite":
@@ -680,134 +685,7 @@ def write_iceberg_table(
             raise ValueError(f"iceberg table dir exists: {path} (mode={mode})")
 
     ice_schema = iceberg_schema_of(df.schema)
-    by_name = {f["name"]: f for f in ice_schema["fields"]}
     spec_fields = parse_partition_by(partition_by, ice_schema)
-    out_df, part_cols = _with_partition_cols(df, spec_fields, ice_schema)
-    if distribute and part_cols:
-        from pyspark.sql import functions as F
-
-        # explicit task count (the session's shuffle-partition setting —
-        # exactly what write.distribution-mode=hash does in the spec
-        # connector): a countless keyed repartition lets AQE coalesce the
-        # few-MB exchange to ONE task that then writes every partition
-        # dir serially (r15: measured 2.44 s -> 2.10 s on the 642-file
-        # months x bucket layout with the count pinned; same file layout,
-        # still one file per dir per holding task)
-        try:
-            n_out = int(
-                out_df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-            )
-        except ValueError:
-            # deployments may set the conf to a non-numeric value (e.g.
-            # "auto"); mirror the other pinned-count sites' fallback
-            n_out = out_df.sparkSession.sparkContext.defaultParallelism
-        out_df = out_df.repartition(n_out, *[F.col(c) for c in part_cols])
-    writer = out_df.write.mode("error")
-    if part_cols:
-        writer = writer.partitionBy(*part_cols)
-    data_dir = table_dir / "data"
-    writer.parquet(str(data_dir))
-    part_schema = _partition_record_schema(spec_fields, ice_schema)
-    entry_schema = _manifest_entry_schema(part_schema)
-
-    now_ms = int(time.time() * 1000)
-    snapshot_id = uuid.uuid4().int % (1 << 62)
-    meta_dir = table_dir / "metadata"
-    meta_dir.mkdir(parents=True)
-
-    # ---- manifest: one ADDED entry per data file ----------------------
-    entries = []
-    total_rows = 0
-    dir_type = _partition_dir_types(spec_fields, ice_schema)
-    paths = sorted(data_dir.rglob("*.parquet"))
-    # footer reads are independent per file and IO-bound (pyarrow releases
-    # the GIL); a partitioned write can land hundreds of files, and the
-    # sequential driver-side loop was the long pole of the metadata commit
-    # (guide 5: the driver should not do per-file data work serially)
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _footer(p):
-        md = pq.ParquetFile(p).metadata
-        return (md.num_rows, p.stat().st_size,
-                _file_column_bounds(p, ice_schema, md))
-
-    with ThreadPoolExecutor(max_workers=min(16, max(1, len(paths)))) as pool:
-        footers = list(pool.map(_footer, paths))
-    for p, (n_rows, file_size, bounds) in zip(paths, footers):
-        rel = p.relative_to(data_dir)
-        values: dict[str, object] = {}
-        for part in rel.parts[:-1]:
-            if "=" in part:
-                k, _, v = part.partition("=")
-                values[k] = _parse_partition_value(dir_type[k], v)
-        if sorted(values) != sorted(part_cols):
-            raise ValueError(
-                f"partition dirs {sorted(values)} != declared {sorted(part_cols)}"
-            )
-        total_rows += n_rows
-        entries.append(
-            {
-                "status": 1,  # ADDED
-                "snapshot_id": snapshot_id,
-                # null sequence numbers inherit from the manifest-list entry
-                "sequence_number": None,
-                "file_sequence_number": None,
-                "data_file": {
-                    "content": 0,  # DATA
-                    "file_path": str(p),
-                    "file_format": "PARQUET",
-                    "partition": values,
-                    "record_count": n_rows,
-                    "file_size_in_bytes": file_size,
-                    "equality_ids": None,
-                    # per-column bounds from the parquet footer (field-id
-                    # keyed) — what skip_where prunes on
-                    **dict(zip(("lower_bounds", "upper_bounds"), bounds)),
-                },
-            }
-        )
-
-    manifest_path = meta_dir / f"{uuid.uuid4()}-m0.avro"
-    manifest_len = _write_avro(
-        manifest_path,
-        entry_schema,
-        entries,
-        meta={
-            "schema": json.dumps(ice_schema),
-            "schema-id": "0",
-            "partition-spec": json.dumps(spec_fields),
-            "partition-spec-id": "0",
-            "format-version": "2",
-            "content": "data",
-        },
-    )
-
-    # ---- manifest list ------------------------------------------------
-    mlist_path = meta_dir / f"snap-{snapshot_id}-1-{uuid.uuid4()}.avro"
-    _write_avro(
-        mlist_path,
-        _MANIFEST_LIST_SCHEMA,
-        [
-            {
-                "manifest_path": str(manifest_path),
-                "manifest_length": manifest_len,
-                "partition_spec_id": 0,
-                "content": 0,  # data
-                "sequence_number": 1,
-                "min_sequence_number": 1,
-                "added_snapshot_id": snapshot_id,
-                "added_data_files_count": len(entries),
-                "existing_data_files_count": 0,
-                "deleted_data_files_count": 0,
-                "added_rows_count": total_rows,
-                "existing_rows_count": 0,
-                "deleted_rows_count": 0,
-            }
-        ],
-        meta={"format-version": "2"},
-    )
-
-    # ---- table metadata ----------------------------------------------
     name_mapping = [
         {"field-id": f["id"], "names": [f["name"]]} for f in ice_schema["fields"]
     ]
@@ -817,8 +695,8 @@ def write_iceberg_table(
         "format-version": 2,
         "table-uuid": str(uuid.uuid4()),
         "location": str(table_dir),
-        "last-sequence-number": 1,
-        "last-updated-ms": now_ms,
+        "last-sequence-number": 0,
+        "last-updated-ms": int(time.time() * 1000),
         "last-column-id": len(ice_schema["fields"]),
         "current-schema-id": 0,
         "schemas": [ice_schema],
@@ -828,37 +706,18 @@ def write_iceberg_table(
         "default-sort-order-id": 0,
         "sort-orders": [{"order-id": 0, "fields": []}],
         "properties": props,
-        "current-snapshot-id": snapshot_id,
-        "snapshots": [
-            {
-                "snapshot-id": snapshot_id,
-                "sequence-number": 1,
-                "timestamp-ms": now_ms,
-                "manifest-list": str(mlist_path),
-                "summary": {
-                    "operation": "append",
-                    "added-data-files": str(len(entries)),
-                    "added-records": str(total_rows),
-                    "total-data-files": str(len(entries)),
-                    "total-records": str(total_rows),
-                },
-                "schema-id": 0,
-            }
-        ],
-        "snapshot-log": [{"timestamp-ms": now_ms, "snapshot-id": snapshot_id}],
+        "current-snapshot-id": None,
+        "snapshots": [],
+        "snapshot-log": [],
         "metadata-log": [],
     }
-    meta_file = meta_dir / f"{0:05d}-{uuid.uuid4()}.metadata.json"
-    tmp = meta_dir / (meta_file.name + ".tmp")
-    tmp.write_text(json.dumps(metadata, indent=1))
-    os.replace(tmp, meta_file)  # atomic publish
-    (meta_dir / "version-hint.text").write_text(meta_file.name)
-    return {
-        "snapshot-id": snapshot_id,
-        "files": len(entries),
-        "rows": total_rows,
-        "metadata": str(meta_file),
-    }
+    moved = _stage_and_move(
+        df, table_dir, 1, spec_fields, ice_schema, "create",
+        distribute=distribute,
+    )
+    # a racing creator is refused by _publish_metadata's version-0 claim
+    (table_dir / "metadata").mkdir(parents=True, exist_ok=True)
+    return _commit_files_as_snapshot(table_dir, metadata, None, moved, "append")
 
 
 class IcebergFormatError(RuntimeError):
@@ -2516,17 +2375,24 @@ def widen_iceberg_column(path: str, name: str, new_type: str) -> dict:
     return _publish_evolved_schema(path, new_fields, "widen")
 
 
-def _publish_metadata(meta_dir: Path, prev_meta_file: Path, new_meta: dict) -> Path:
+def _publish_metadata(
+    meta_dir: Path, prev_meta_file: Path | None, new_meta: dict
+) -> Path:
     """The ONE optimistic-concurrency metadata publish shared by every
-    commit path (snapshot commit, position deletes, schema evolution,
-    expire): claim the next version with a create-exclusive ``.commit-v``
-    marker — two writers racing from the same base version collide here,
-    and the loser errors instead of its hint swap silently discarding the
-    winner's metadata — then atomically write the new metadata.json and
-    swap the version-hint (the commit point). Any failure between claim
+    commit path (table creation, snapshot commit, position deletes,
+    schema evolution, expire): claim the next version with a
+    create-exclusive ``.commit-v`` marker — two writers racing from the
+    same base version collide here, and the loser errors instead of its
+    hint swap silently discarding the winner's metadata — then atomically
+    write the new metadata.json and swap the version-hint (the commit
+    point). With no ``prev_meta_file`` the claim is version 0: table
+    creation is the first commit of this path. Any failure between claim
     and publish releases the marker, so a crash never wedges the table
     with a permanent 'concurrent commit' error."""
-    version_n = int(prev_meta_file.name.split("-", 1)[0]) + 1
+    version_n = (
+        0 if prev_meta_file is None
+        else int(prev_meta_file.name.split("-", 1)[0]) + 1
+    )
     marker = meta_dir / f".commit-v{version_n:05d}"
     try:
         fd = os.open(marker, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
@@ -2903,21 +2769,42 @@ def _stage_and_move(
     spec_fields: list[dict],
     ice_schema: dict,
     what: str,
+    distribute: bool = False,
 ) -> list[Path]:
     """Distributed staged write + atomic move into ``data/`` — the shared
-    front half of every snapshot commit that appends files (DataFrame
-    append, UPDATE, MERGE). Stages into a uuid-suffixed dir OWNED by this
-    process (two writers racing for the same sequence number each stage
-    privately; the race is decided by the create-exclusive metadata
-    publish, never by one writer rmtree'ing the other's files), guards
-    against a concurrent stale-staging reclaim, moves shards under
-    sequence-stamped unique names, and skips zero-row shards (a pure-
-    delete MERGE or an empty append stages them)."""
+    front half of every snapshot commit that appends files (table
+    creation, DataFrame append, UPDATE, MERGE). Stages into a uuid-
+    suffixed dir OWNED by this process (two writers racing for the same
+    sequence number each stage privately; the race is decided by the
+    create-exclusive metadata publish, never by one writer rmtree'ing the
+    other's files), guards against a concurrent stale-staging reclaim,
+    moves shards under sequence-stamped unique names, and skips zero-row
+    shards (a pure-delete MERGE or an empty append stages them).
+
+    ``distribute`` clusters rows by partition value with one keyed
+    shuffle before the write (``write_iceberg_table(distribute=True)``)."""
     import pyarrow.parquet as _pq
 
     data_dir = table_dir / "data"
     stage = table_dir / f"_staging_s{seq}-{uuid.uuid4().hex}"
     df, part_cols = _with_partition_cols(df, spec_fields, ice_schema)
+    if distribute and part_cols:
+        from pyspark.sql import functions as F
+
+        # explicit task count (the session's shuffle-partition setting —
+        # exactly what write.distribution-mode=hash does in the spec
+        # connector): a countless keyed repartition lets AQE coalesce the
+        # few-MB exchange to ONE task that then writes every partition
+        # dir serially (r15: measured 2.44 s -> 2.10 s on the 642-file
+        # months x bucket layout with the count pinned; same file layout,
+        # still one file per dir per holding task)
+        try:
+            n_out = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        except ValueError:
+            # deployments may set the conf to a non-numeric value (e.g.
+            # "auto"); mirror the other pinned-count sites' fallback
+            n_out = df.sparkSession.sparkContext.defaultParallelism
+        df = df.repartition(n_out, *[F.col(c) for c in part_cols])
     writer = df.write.mode("error")
     if part_cols:
         writer = writer.partitionBy(*part_cols)
@@ -3095,7 +2982,7 @@ def _write_position_delete_file(table_dir: Path, seq: int, rows) -> Path:
 def _commit_files_as_snapshot(
     table_dir: Path,
     metadata: dict,
-    prev_meta_file: Path,
+    prev_meta_file: Path | None,
     moved: list[Path],
     operation: str,
     extra_summary: dict | None = None,
@@ -3105,14 +2992,19 @@ def _commit_files_as_snapshot(
     carried_lineage: bool | set[str] = False,
     superseded_delete_rows: int = 0,
 ) -> dict:
-    """Back half of a snapshot commit, shared by the DataFrame path
+    """Back half of a snapshot commit, shared by table creation
+    (``write_iceberg_table``), the DataFrame path
     (``_commit_iceberg_snapshot``), the DataSource sink (which stages its
     own shards), predicate DML (``delete_iceberg_rows`` /
     ``update_iceberg_rows``) and ``append_position_deletes``: parquet
     files already placed under ``data/`` (and/or a position-delete row
     set) become ONE new snapshot — at most one data manifest + one delete
     manifest, one manifest list (non-replace: previous entries carried by
-    reference), one published metadata version. ``extra_summary`` lands
+    reference), one published metadata version. A base with no current
+    snapshot and ``prev_meta_file=None`` is table creation: nothing is
+    carried, prior totals are 0, the snapshot has no parent and the
+    metadata log stays empty; ``_publish_metadata`` claims version 0.
+    ``extra_summary`` lands
     in the snapshot summary (the sink's txn identity for exactly-once
     replay skipping). An UPDATE passes BOTH ``moved`` and
     ``position_deletes``, making the delete-old + append-new pair atomic
@@ -3222,12 +3114,13 @@ def _commit_files_as_snapshot(
         current = refs[branch]["snapshot-id"]
     else:
         current = metadata["current-snapshot-id"]
-    prev_snapshot = next(
+    # a base with no current snapshot is table creation: nothing to carry
+    prev_snapshot = None if current is None else next(
         s for s in metadata["snapshots"] if s["snapshot-id"] == current
     )
     # non-replace: previous snapshot's manifests carried by reference;
     # replace: the new manifest list stands alone (compaction rewrite)
-    if operation != "replace":
+    if operation != "replace" and prev_snapshot is not None:
         prev_entries = _read_avro(Path(prev_snapshot["manifest-list"]))
         if deletion_vectors is not None:
             # DV commits carry MERGED vectors (v3's one-live-DV-per-file
@@ -3239,17 +3132,27 @@ def _commit_files_as_snapshot(
             ]
         mlist_entries.extend(prev_entries)
 
+    # footer reads are independent per file and IO-bound (pyarrow releases
+    # the GIL); a partitioned write can land hundreds of files, and a
+    # sequential driver-side loop was the long pole of the metadata commit
+    from concurrent.futures import ThreadPoolExecutor
+
+    def _footer(p):
+        md = pq.ParquetFile(p).metadata  # one footer read per file
+        return md, p.stat().st_size, _file_column_bounds(p, ice_schema, md)
+
+    with ThreadPoolExecutor(max_workers=min(16, max(1, len(moved)))) as pool:
+        footers = list(pool.map(_footer, moved))
     entries = []
     total_rows = 0
     dir_type = _partition_dir_types(spec_fields, ice_schema)
-    for p in moved:
+    for p, (pq_md, file_size, bounds) in zip(moved, footers):
         rel = p.relative_to(data_dir)
         values: dict[str, object] = {}
         for part in rel.parts[:-1]:
             if "=" in part:
                 k, _, v = part.partition("=")
                 values[k] = _parse_partition_value(dir_type[k], v)
-        pq_md = pq.ParquetFile(p).metadata  # one footer read per file
         n_rows = pq_md.num_rows
         total_rows += n_rows
         if str(p) in carried_paths:
@@ -3275,12 +3178,11 @@ def _commit_files_as_snapshot(
                     "file_format": "PARQUET",
                     "partition": values,
                     "record_count": n_rows,
-                    "file_size_in_bytes": p.stat().st_size,
+                    "file_size_in_bytes": file_size,
                     "equality_ids": None,
                     # per-column bounds from the parquet footer (field-id
                     # keyed) — what skip_where prunes on
-                    **dict(zip(("lower_bounds", "upper_bounds"),
-                               _file_column_bounds(p, ice_schema, pq_md))),
+                    **dict(zip(("lower_bounds", "upper_bounds"), bounds)),
                 },
             }
         )
@@ -3450,8 +3352,9 @@ def _commit_files_as_snapshot(
         meta={"format-version": "2" if fv < 3 else "3"},
     )
 
-    prev_total_files = int(prev_snapshot["summary"].get("total-data-files", "0"))
-    prev_total_rows = int(prev_snapshot["summary"].get("total-records", "0"))
+    prev_summary = prev_snapshot["summary"] if prev_snapshot else {}
+    prev_total_files = int(prev_summary.get("total-data-files", "0"))
+    prev_total_rows = int(prev_summary.get("total-records", "0"))
     if operation == "replace":  # replace: the new files ARE the table
         total_files, total_records = len(entries), total_rows
     else:
@@ -3481,7 +3384,7 @@ def _commit_files_as_snapshot(
         summary["added-position-deletes"] = str(n_pos_deletes)
     new_snapshot = {
         "snapshot-id": snapshot_id,
-        "parent-snapshot-id": current,
+        **({"parent-snapshot-id": current} if current is not None else {}),
         "sequence-number": seq,
         "timestamp-ms": now_ms,
         "manifest-list": str(mlist_path),
@@ -3509,9 +3412,11 @@ def _commit_files_as_snapshot(
         new_meta["snapshot-log"] = metadata["snapshot-log"] + [
             {"timestamp-ms": now_ms, "snapshot-id": snapshot_id}
         ]
-    new_meta["metadata-log"] = metadata["metadata-log"] + [
-        {"timestamp-ms": metadata["last-updated-ms"], "metadata-file": str(prev_meta_file)}
-    ]
+    if prev_meta_file is not None:
+        new_meta["metadata-log"] = metadata["metadata-log"] + [
+            {"timestamp-ms": metadata["last-updated-ms"],
+             "metadata-file": str(prev_meta_file)}
+        ]
     meta_file = _publish_metadata(meta_dir, prev_meta_file, new_meta)
     return {
         "snapshot-id": snapshot_id,

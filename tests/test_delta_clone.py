@@ -206,3 +206,29 @@ def test_file_scheme_absolute_adds_read_and_mask(spark, tmp_path):
     got = read_delta_snapshot(spark, dst)
     assert got.count() == 26
     assert got.where(F.col("k") < 4).count() == 0  # DV still applies
+
+
+def test_clone_carries_in_commit_timestamp(spark, tmp_path):
+    """A source with in-commit timestamps enabled obliges the clone's v0
+    to carry ``commitInfo.inCommitTimestamp`` too: the cloned
+    configuration declares the feature from the first commit."""
+    import json
+    from pathlib import Path
+
+    src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
+    write_delta_snapshot(
+        _mk(spark, 0, 10), src,
+        configuration={"delta.enableInCommitTimestamps": "true"},
+    )
+    clone_delta_table(src, dst)
+    v0 = (Path(dst) / "_delta_log" / f"{0:020d}.json").read_text()
+    info = [json.loads(ln)["commitInfo"] for ln in v0.splitlines()
+            if "commitInfo" in json.loads(ln)]
+    assert len(info) == 1 and info[0]["operation"] == "CLONE"
+    assert isinstance(info[0].get("inCommitTimestamp"), int)
+    # the clone's next commit stamps strictly later
+    commit_delta(_mk(spark, 10, 12), dst, mode="append")
+    v1 = (Path(dst) / "_delta_log" / f"{1:020d}.json").read_text()
+    ict1 = next(json.loads(ln)["commitInfo"]["inCommitTimestamp"]
+                for ln in v1.splitlines() if "commitInfo" in json.loads(ln))
+    assert ict1 > info[0]["inCommitTimestamp"]

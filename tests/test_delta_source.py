@@ -516,6 +516,50 @@ def test_batch_write_append(registered, tmp_path):
         ).mode("overwrite").save(path)
 
 
+def test_batch_write_to_binary_collations_table(registered, tmp_path):
+    """The sink checks the writer protocol against the table schema like
+    ``commit_delta`` does: a ``collations`` table whose every declared
+    collation is UTF8_BINARY accepts the append; a non-binary one still
+    refuses."""
+    import json
+    from pathlib import Path as _P
+
+    from evolution_spark.io.delta_log import (
+        _replay_log,
+        read_delta_snapshot,
+        write_delta_snapshot,
+    )
+
+    spark = registered
+
+    def _collated(path, ident):
+        write_delta_snapshot(
+            spark.range(3).selectExpr("id AS k", "cast(id AS string) AS s"),
+            path,
+        )
+        _, schema_string, _, _, st = _replay_log(_P(path), return_state=True)
+        schema = json.loads(schema_string)
+        schema["fields"][1]["metadata"] = {"__COLLATIONS": {"s": ident}}
+        meta = dict(st["metadata"], schemaString=json.dumps(schema))
+        (_P(path) / "_delta_log" / f"{1:020d}.json").write_text(
+            json.dumps({"protocol": {
+                "minReaderVersion": 3, "minWriterVersion": 7,
+                "readerFeatures": ["collations"],
+                "writerFeatures": ["collations"],
+            }}) + "\n" + json.dumps({"metaData": meta}) + "\n"
+        )
+
+    batch = spark.range(3, 5).selectExpr("id AS k", "cast(id AS string) AS s")
+    binary = str(tmp_path / "colbin")
+    _collated(binary, "SPARK.UTF8_BINARY")
+    batch.write.format("evolution_delta").mode("append").save(binary)
+    assert read_delta_snapshot(spark, binary).count() == 5
+    icu = str(tmp_path / "colicu")
+    _collated(icu, "ICU.de_DE.75.1")
+    with pytest.raises(Exception, match="non-binary"):
+        batch.write.format("evolution_delta").mode("append").save(icu)
+
+
 def test_streaming_sink_exactly_once(registered, tmp_path):
     """The format-level streaming sink: each micro-batch is ONE Delta
     version carrying a txn action; a replayed batchId is skipped."""
