@@ -47,6 +47,7 @@ import time
 import uuid
 from contextlib import contextmanager, nullcontext
 from pathlib import Path
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
@@ -722,8 +723,9 @@ def write_iceberg_table(
 
 class IcebergFormatError(RuntimeError):
     """Raised when a table's metadata demands reader capabilities this
-    implementation does not have (format-version above 2, malformed
-    delete metadata, partition-scoped equality deletes). Mirrors
+    implementation does not have (format-version above 3, malformed
+    manifests, partition-scoped equality deletes); ``_plan_scan`` raises
+    it for both readers. Mirrors
     ``delta_log.DeltaProtocolError``: refusing loudly beats silently
     resurrecting deleted rows. Both POSITION (content=1) and GLOBAL
     EQUALITY (content=2) deletes are implemented — applied during scan —
@@ -738,21 +740,321 @@ def _partition_record_key(part: dict) -> str:
     return json.dumps(part, sort_keys=True, default=str)
 
 
-def _position_delete_frame(spark, delete_files, dv_deletes):
+class _ManifestEntry(NamedTuple):
+    """One manifest entry with the spec's inheritance rules applied."""
+
+    manifest: dict  # the manifest-list record of the entry's manifest
+    status: int  # 0 existing, 1 added, 2 deleted
+    data_file: dict
+    seq: int  # data sequence number, the manifest's when not recorded
+    spec_id: int  # the manifest's partition-spec id
+    schema_id: int  # the manifest's schema id, current when not recorded
+    first_row_id: int | None  # v3 row lineage, inherited when not recorded
+
+
+def _manifest_content(mf: dict) -> int:
+    """A manifest-list record's ``content``: 0 data, 1 deletes."""
+    return int(mf.get("content") or 0)
+
+
+def _manifest_entries(metadata: dict, snapshot: dict, keep=None, read=None):
+    """Walk ``snapshot``'s manifest list and yield every entry (deleted
+    ones included) of every manifest ``keep`` accepts — all when None; a
+    rejected manifest is never read. The one reader of manifest entries:
+    ``read`` (default ``_read_avro_with_meta``) lets a caller decode each
+    distinct manifest once across several walks.
+
+    Inheritance per the spec: an entry without a sequence number takes
+    its manifest's (an EXPLICIT 0 is a real sequence number); the schema
+    id comes from the manifest's Avro metadata (pre-spec writers record
+    none: assumed current); an ADDED entry without a ``first_row_id``
+    takes the manifest's ``first_row_id`` plus the record counts of the
+    preceding such entries ('First Row ID Inheritance' — entries with an
+    explicit id do not consume from the manifest's block)."""
+    read = read or _read_avro_with_meta
+    for mf in _read_avro(Path(snapshot["manifest-list"])):
+        if keep is not None and not keep(mf):
+            continue
+        entries, mf_meta = read(Path(mf["manifest_path"]))
+        try:
+            schema_id = int((mf_meta.get("schema-id") or b"").decode())
+        except ValueError:
+            schema_id = metadata["current-schema-id"]
+        mf_seq = int(mf.get("sequence_number") or 0)
+        spec_id = int(mf.get("partition_spec_id") or 0)
+        mf_first = mf.get("first_row_id")
+        added_offset = 0
+        for entry in entries:
+            dfile = entry["data_file"]
+            es = entry.get("sequence_number")
+            first = dfile.get("first_row_id")
+            if entry["status"] == 1 and first is None and mf_first is not None:
+                first = int(mf_first) + added_offset
+                added_offset += int(dfile.get("record_count") or 0)
+            yield _ManifestEntry(
+                mf, entry["status"], dfile,
+                mf_seq if es is None else int(es), spec_id, schema_id,
+                None if first is None else int(first),
+            )
+
+
+class _ScanPlan(NamedTuple):
+    """What one snapshot read sees (``_plan_scan``)."""
+
+    metadata: dict
+    schema: dict  # the wanted Iceberg schema
+    data: list[_ManifestEntry]  # live data files that survive pruning
+    position_deletes: list[_ManifestEntry]  # parquet (file_path, pos)
+    dv_deletes: list[_ManifestEntry]  # v3 Puffin deletion vectors
+    # (delete parquet, delete sequence, equality field-ids, record count,
+    #  canonical partition scope or None for a global delete)
+    equality_deletes: list[tuple[str, int, list[int], int, str | None]]
+
+    @property
+    def delete_rows(self) -> int:
+        """Position + DV deleted rows, from the manifests' record counts."""
+        return sum(
+            int(e.data_file.get("record_count") or 0)
+            for e in self.position_deletes + self.dv_deletes
+        )
+
+
+def _plan_scan(
+    path: str,
+    snapshot_id: int | None = None,
+    partition_where: dict[str, object] | None = None,
+    skip_where: list[tuple[str, str, object]] | None = None,
+    current_schema: bool = False,
+    stringly: bool = False,
+) -> _ScanPlan:
+    """Plan a snapshot read for both readers (``read_iceberg_table`` and
+    the ``evolution_iceberg`` DataSource): which data files, deletes and
+    schema epochs it sees, from one walk of the snapshot's manifests.
+
+    Refuses (``IcebergFormatError``) what this reader cannot honour:
+    ``format-version`` > 3, delete manifests tracking anything but
+    content=1/2 files, data manifests tracking delete files, equality
+    deletes without ``equality_ids``.
+
+    ``partition_where`` ({partition field or source column: value}) is
+    resolved per partition SPEC — under partition evolution a key may be
+    expressible in some spec epochs and not others; manifests whose spec
+    cannot express it are kept (the spec's rule), a key NO spec resolves
+    is a typo and raises. ``stringly`` coerces option strings by the
+    spec's types. ``skip_where`` drops files whose field-id keyed column
+    bounds prove no row matches (files without bounds are kept; the caller
+    still applies the predicate).
+
+    The wanted schema: a current read uses the CURRENT schema
+    (metadata-only evolution creates no snapshot, so the snapshot's
+    recorded schema-id may lag); time travel uses the schema current at
+    that snapshot; ``current_schema`` pins the file list to
+    ``snapshot_id`` but keeps current names and types (DML predicates and
+    the stream's pinned schema use current names; resolving a rename
+    against the old schema would read the column as all-null)."""
+    metadata, _ = _load_metadata(Path(path))
+    fv = int(metadata.get("format-version", 1))
+    if fv > 3:
+        raise IcebergFormatError(
+            f"table format-version {fv} exceeds the implemented version 3 — "
+            "refusing to read rather than dropping unknown semantics"
+        )
+    schemas = {s["schema-id"]: s for s in metadata["schemas"]}
+    resolved_by_spec: dict[int, list | None] = {}
+    if partition_where:
+        specs_by_id = {
+            sp["spec-id"]: sp["fields"]
+            for sp in metadata.get("partition-specs") or []
+        }
+        if not specs_by_id:
+            raise IcebergFormatError(
+                "metadata declares no partition-specs — cannot resolve "
+                "partition_where against a spec-less table"
+            )
+        cur_fields = schemas[metadata["current-schema-id"]]["fields"]
+        last_err: Exception | None = None
+        for sid, sp_fields in specs_by_id.items():
+            try:
+                resolved_by_spec[sid] = resolve_partition_where(
+                    partition_where, sp_fields, cur_fields, stringly=stringly
+                )
+            except (ValueError, KeyError) as e:
+                resolved_by_spec[sid] = None
+                last_err = e
+        if last_err is not None and all(
+            v is None for v in resolved_by_spec.values()
+        ):
+            raise last_err
+    current = snapshot_id if snapshot_id is not None else metadata["current-snapshot-id"]
+    try:
+        snapshot = next(
+            s for s in metadata["snapshots"] if s["snapshot-id"] == current
+        )
+    except StopIteration:
+        known = [s["snapshot-id"] for s in metadata["snapshots"]]
+        raise ValueError(f"snapshot {current} not in table history {known}") from None
+    want_schema_id = metadata["current-schema-id"]
+    if snapshot_id is not None and not current_schema:
+        recorded = snapshot.get("schema-id")
+        if recorded is not None:
+            want_schema_id = recorded
+    want_schema = schemas[want_schema_id]
+    skip_checks: list[tuple[int, str, str, object]] = []
+    by_name = {f["name"]: f for f in want_schema["fields"]}
+    for col, op, val in skip_where or []:
+        if col not in by_name:
+            raise ValueError(
+                f"skip_where column {col!r} not in schema "
+                f"{sorted(by_name)} — refusing to prune on a "
+                "non-existent column"
+            )
+        f = by_name[col]
+        import datetime as _dt
+
+        if f["type"] == "date" and isinstance(val, _dt.date):
+            val = (val - _dt.date(1970, 1, 1)).days
+        # type-check the literal NOW — a mismatched literal would
+        # otherwise surface as a bare TypeError from a bound comparison
+        # deep inside the manifest walk
+        _want = {
+            "int": (int,), "long": (int,), "date": (int,),
+            "float": (int, float), "double": (int, float),
+            "string": (str,),
+        }.get(f["type"])
+        if _want is not None and not isinstance(val, _want):
+            raise TypeError(
+                f"skip_where literal {val!r} does not match column "
+                f"{col!r}'s iceberg type {f['type']} — pass a "
+                f"{'/'.join(t.__name__ for t in _want)} literal"
+            )
+        skip_checks.append((f["id"], f["type"], op, val))
+
+    plan = _ScanPlan(metadata, want_schema, [], [], [], [])
+    for e in _manifest_entries(metadata, snapshot):
+        if e.status == 2:
+            continue
+        dfile = e.data_file
+        content = int(dfile.get("content") or 0)
+        if _manifest_content(e.manifest) == 1:
+            if content == 1 and dfile.get("referenced_data_file"):
+                # v3 DELETION VECTOR: a Puffin blob scoped to ONE data file
+                plan.dv_deletes.append(e)
+                continue
+            if content == 1:
+                plan.position_deletes.append(e)
+                continue
+            if content == 2:
+                ids = dfile.get("equality_ids")
+                if not ids:
+                    raise IcebergFormatError(
+                        f"equality delete file {dfile['file_path']} "
+                        "carries no equality_ids — malformed metadata"
+                    )
+                part = dfile.get("partition") or {}
+                # spec scoping: a delete entry with REAL partition values
+                # applies only to data files in that partition (matched
+                # via the same canonical record encoding data files get);
+                # an all-null record is a GLOBAL delete (what
+                # append_equality_deletes writes without partition_scope).
+                # A foreign delete scoped to the literal all-null
+                # partition is indistinguishable in this encoding and is
+                # treated as global (documented over-approximation: it can
+                # only over-delete rows carrying the matching key values
+                # in null partitions, never unrelated keys).
+                scope = (
+                    _partition_record_key(part)
+                    if any(v is not None for v in part.values())
+                    else None
+                )
+                plan.equality_deletes.append(
+                    (dfile["file_path"], e.seq, list(ids),
+                     int(dfile.get("record_count") or 0), scope)
+                )
+                continue
+            raise IcebergFormatError(
+                f"DELETE manifest entry {dfile['file_path']} has "
+                f"content={content} — malformed metadata (delete "
+                "manifests must track content=1/2 files)"
+            )
+        if content != 0:
+            raise IcebergFormatError(
+                f"data manifest entry {dfile['file_path']} has content="
+                f"{content} — malformed metadata (delete files belong "
+                "in content=1 manifests)"
+            )
+        rw = resolved_by_spec.get(e.spec_id)
+        if rw and any(
+            dfile.get("partition", {}).get(k) != v for k, v in rw
+        ):
+            continue  # metadata-level partition pruning
+        if skip_checks:
+            lbs = {b["key"]: b["value"]
+                   for b in (dfile.get("lower_bounds") or [])}
+            ubs = {b["key"]: b["value"]
+                   for b in (dfile.get("upper_bounds") or [])}
+            if any(
+                not _bounds_may_match(
+                    _decode_bound(t, lbs[fid]) if fid in lbs else None,
+                    _decode_bound(t, ubs[fid]) if fid in ubs else None,
+                    op, val,
+                )
+                for fid, t, op, val in skip_checks
+            ):
+                continue  # bounds prove no row can match
+        plan.data.append(e)
+    return plan
+
+
+def _epoch_alignment(
+    metadata: dict, want_schema: dict, schema_id: int
+) -> tuple[dict, list[tuple[dict, dict | None]]]:
+    """The field-id realignment of files written under ``schema_id`` to
+    ``want_schema``: (the written schema, one (wanted field, written
+    field) pair per wanted column). The written field carries the same
+    field id — possibly another name (rename) or a narrower type (widen);
+    None means the column was added after the files were written and
+    reads as its ``initial-default`` (the spec's v3 'Default values'
+    rule; null when none is declared). Written columns no wanted field
+    claims (dropped) are not read. Field-id stability is what makes
+    evolution metadata-only: no file is rewritten."""
+    written = next(
+        (s for s in metadata["schemas"] if s["schema-id"] == schema_id), None
+    )
+    if written is None:
+        raise IcebergFormatError(
+            f"manifest references unknown schema-id {schema_id}"
+        )
+    by_id = {f["id"]: f for f in written["fields"]}
+    return written, [(f, by_id.get(f["id"])) for f in want_schema["fields"]]
+
+
+def _aligned_columns(pairs: list[tuple[dict, dict | None]]) -> list:
+    """Spark projection of an ``_epoch_alignment``: each wanted column
+    from its written column, cast to the wanted type, or as its
+    initial-default literal."""
+    from pyspark.sql import functions as F
+
+    return [
+        (F.col(gf["name"]) if gf is not None
+         else F.lit(decode_initial_default(f)))
+        .cast(_FROM_ICEBERG[f["type"]]).alias(f["name"])
+        for f, gf in pairs
+    ]
+
+
+def _position_delete_frame(spark, position_deletes, dv_deletes):
     """One ``(file_path, pos)`` DataFrame from parquet position-delete
     files plus decoded v3 deletion vectors (or None when neither exists).
     DV blobs are decoded driver-side — each is one seek+read sized by its
     deleted-row count, and the resulting frame is the anti-join's BUILD
     side, so cost tracks deleted rows, never table size."""
-    from pyspark.sql import functions as F
-
     from evolution_spark.io.scan_filters import decoded_file_path
 
     frames = []
-    if delete_files:
+    if position_deletes:
         frames.append(
             spark.read.schema("file_path string, pos long")
-            .parquet(*delete_files)
+            .parquet(*[e.data_file["file_path"] for e in position_deletes])
             # delete files may record paths as plain paths or URIs;
             # normalize to the same decoded plain-path form the join uses
             .withColumn("file_path", decoded_file_path("file_path"))
@@ -764,10 +1066,14 @@ def _position_delete_frame(spark, delete_files, dv_deletes):
         from evolution_spark.io.scan_filters import plain_path
 
         parts = []
-        for puffin_path, data_file, offset, size in dv_deletes:
-            positions = read_puffin_dv(puffin_path, offset, size)
+        for e in dv_deletes:
+            d = e.data_file
+            positions = read_puffin_dv(
+                d["file_path"], int(d["content_offset"]),
+                int(d["content_size_in_bytes"]),
+            )
             parts.append(pd.DataFrame({
-                "file_path": plain_path(data_file),
+                "file_path": plain_path(d["referenced_data_file"]),
                 "pos": positions,
             }))
         frames.append(spark.createDataFrame(
@@ -793,15 +1099,18 @@ def read_iceberg_table(
     _current_schema: bool = False,
     row_lineage: bool = False,
 ) -> DataFrame:
-    """Open an Iceberg table by replaying its metadata chain — version
-    hint -> table metadata -> current snapshot -> manifest list ->
-    manifests -> data files. The file list comes from the snapshot, NOT a
-    directory listing (orphan/uncommitted files are invisible — the
-    Iceberg read contract), and identity-partition columns resolve from
-    the hive paths under ``basePath`` with the schema's declared types.
-    ``snapshot_id`` time-travels to any snapshot in the table's history
-    (appends never rewrite old manifests, so the historical file lists
-    are still intact).
+    """Open an Iceberg table as a DataFrame. The files, deletes and
+    schema epochs the read sees come from ``_plan_scan`` — the planner
+    the ``evolution_iceberg`` DataSource shares, so both readers refuse,
+    prune and pick schemas identically. The file list comes from the
+    snapshot's manifests, NOT a directory listing (orphan/uncommitted
+    files are invisible — the Iceberg read contract), and
+    identity-partition columns resolve from the hive paths under
+    ``basePath`` with the schema's declared types. ``snapshot_id``
+    time-travels to any snapshot in the table's history (appends never
+    rewrite old manifests, so the historical file lists are still
+    intact); files written under older schemas are realigned by field id
+    (``_epoch_alignment``).
 
     ROW-LEVEL DELETES (v2 merge-on-read): POSITION delete files
     (manifest-list ``content=1`` entries whose data files have
@@ -846,272 +1155,37 @@ def read_iceberg_table(
         if snapshot_id is not None:
             raise ValueError("pass snapshot_id OR ref, not both")
         snapshot_id = resolve_iceberg_ref(path, ref)
-    table_dir = Path(path)
-    meta_dir = table_dir / "metadata"
-    hint = (meta_dir / "version-hint.text").read_text().strip()
-    metadata = json.loads((meta_dir / hint).read_text())
-    fv = int(metadata.get("format-version", 1))
-    if fv > 3:
-        raise IcebergFormatError(
-            f"table format-version {fv} exceeds the implemented version 3 — "
-            "refusing to read rather than dropping unknown semantics"
-        )
+    plan = _plan_scan(
+        path, snapshot_id, partition_where, skip_where,
+        current_schema=_current_schema,
+    )
     # v3 read support covers what this engine models: deletion vectors
-    # (Puffin blobs, decoded below exactly like position deletes), the
-    # unchanged v2 scan semantics, and (round 11) the spec's row-lineage
-    # reader rule behind ``row_lineage=True`` — what lets rewrites
+    # (Puffin blobs, decoded exactly like position deletes), the
+    # unchanged v2 scan semantics, and the spec's row-lineage reader rule
+    # behind ``row_lineage=True`` — what lets rewrites
     # (compaction/UPDATE/MERGE) carry each surviving row's _row_id.
-    if row_lineage and fv < 3:
+    metadata = plan.metadata
+    if row_lineage and int(metadata.get("format-version", 1)) < 3:
         raise IcebergFormatError(
             "row_lineage=True requires a format-version 3 table (row "
             "lineage is a v3 feature) — upgrade_iceberg_format_version "
             "first"
         )
-    specs_by_id = {
-        sp["spec-id"]: sp["fields"]
-        for sp in metadata.get("partition-specs") or []
-    }
-    resolved_by_spec: dict[int, list | None] = {}
-    if partition_where:
-        if not specs_by_id:
-            raise IcebergFormatError(
-                "metadata declares no partition-specs — cannot resolve "
-                "partition_where against a spec-less table"
-            )
-        cur_schema = next(
-            s for s in metadata["schemas"]
-            if s["schema-id"] == metadata["current-schema-id"]
-        )
-        # per-SPEC resolution: under partition evolution a key may be
-        # expressible in some spec epochs and not others — manifests
-        # whose spec cannot express it are kept conservatively (the
-        # spec's rule). A key NO spec can resolve is a typo and raises.
-        last_err: Exception | None = None
-        for sid, sp_fields in specs_by_id.items():
-            try:
-                resolved_by_spec[sid] = resolve_partition_where(
-                    partition_where, sp_fields, cur_schema["fields"]
-                )
-            except (ValueError, KeyError) as e:
-                resolved_by_spec[sid] = None
-                last_err = e
-        if last_err is not None and all(
-            v is None for v in resolved_by_spec.values()
-        ):
-            raise last_err
+    from pyspark.sql import functions as F
 
-        def _resolved_for(sid: int):
-            return resolved_by_spec.get(sid)
-    else:
-        def _resolved_for(sid: int):
-            return []
-    current = snapshot_id if snapshot_id is not None else metadata["current-snapshot-id"]
-    try:
-        snapshot = next(
-            s for s in metadata["snapshots"] if s["snapshot-id"] == current
-        )
-    except StopIteration:
-        known = [s["snapshot-id"] for s in metadata["snapshots"]]
-        raise ValueError(f"snapshot {current} not in table history {known}") from None
-    # a CURRENT-table read always uses the CURRENT schema (metadata-only
-    # evolution like RENAME/DROP/widen creates no snapshot, so the last
-    # snapshot's recorded schema-id may lag); TIME TRAVEL reads the schema
-    # that was current at that snapshot — a post-evolution read of an old
-    # snapshot must not invent added columns or apply later renames.
-    # ``_current_schema=True`` (internal, DML): the scan pins the FILE
-    # LIST to a snapshot for race-freedom but must still expose CURRENT
-    # names/types — predicates arrive against the evolved schema.
-    if snapshot_id is None or _current_schema:
-        want_schema_id = metadata["current-schema-id"]
-    else:
-        want_schema_id = snapshot.get("schema-id", metadata["current-schema-id"])
-        if want_schema_id is None:
-            want_schema_id = metadata["current-schema-id"]
-    want_ice_schema = next(
-        s for s in metadata["schemas"] if s["schema-id"] == want_schema_id
+    from evolution_spark.io.scan_filters import (
+        anti_join_deleted_positions,
+        decoded_file_path,
+        plain_path,
     )
-    skip_checks: list[tuple[int, str, str, object]] = []
-    if skip_where:
-        # DATA SKIPPING on manifest column bounds (field-id keyed, so a
-        # rename between write and read cannot mis-prune): files whose
-        # [lower, upper] range provably excludes the predicate are
-        # dropped from the scan BEFORE Spark lists them — the needle-on-
-        # 100 TB feature; files without bounds are conservatively kept.
-        # The SAME predicate must still be applied with .filter.
-        by_name_w = {f["name"]: f for f in want_ice_schema["fields"]}
-        for col, op, val in skip_where:
-            if col not in by_name_w:
-                raise ValueError(
-                    f"skip_where column {col!r} not in schema "
-                    f"{sorted(by_name_w)} — refusing to prune on a "
-                    "non-existent column"
-                )
-            f = by_name_w[col]
-            import datetime as _dt
 
-            if f["type"] == "date" and isinstance(val, _dt.date):
-                val = (val - _dt.date(1970, 1, 1)).days
-            # type-check the literal NOW — a mismatched literal would
-            # otherwise surface as a bare TypeError from a bound
-            # comparison deep inside the manifest walk
-            _want = {
-                "int": (int,), "long": (int,), "date": (int,),
-                "float": (int, float), "double": (int, float),
-                "string": (str,),
-            }.get(f["type"])
-            if _want is not None and not isinstance(val, _want):
-                raise TypeError(
-                    f"skip_where literal {val!r} does not match column "
-                    f"{col!r}'s iceberg type {f['type']} — pass a "
-                    f"{'/'.join(t.__name__ for t in _want)} literal"
-                )
-            skip_checks.append((f["id"], f["type"], op, val))
-
-    files: list[str] = []
-    file_seq: dict[str, int] = {}  # decoded path -> data sequence number
-    file_part: dict[str, str] = {}  # decoded path -> canonical partition key
-    file_first: dict[str, int | None] = {}  # decoded path -> first_row_id
-    file_sid: dict[str, int] = {}  # raw path -> manifest schema-id
-    file_spec: dict[str, int] = {}  # raw path -> manifest partition-spec-id
-    delete_files: list[str] = []
-    # v3 DVs: (puffin path, referenced data file, offset, size)
-    dv_deletes: list[tuple[str, str, int, int]] = []
-    delete_rows = 0
-    # (delete parquet, delete sequence, equality field-ids, record count,
-    #  partition scope key or None for global)
-    eq_deletes: list[tuple[str, int, list[int], int, str | None]] = []
-    from evolution_spark.io.scan_filters import plain_path
-
-    for mf in _read_avro(Path(snapshot["manifest-list"])):
-        is_delete_manifest = int(mf.get("content") or 0) == 1
-        mf_seq = int(mf.get("sequence_number") or 0)
-        mf_spec = int(mf.get("partition_spec_id") or 0)
-        # v3 row lineage: the manifest's base _row_id (manifest-list
-        # field-id 520) + a running record-count offset implement the
-        # spec's 'First Row ID Inheritance' for ADDED entries that carry
-        # no explicit first_row_id. Counted over ALL added data entries
-        # (pruned ones included — the writer assigned ids in entry order).
-        mf_first = mf.get("first_row_id")
-        added_offset = 0
-        mf_entries, mf_meta = _read_avro_with_meta(Path(mf["manifest_path"]))
-        try:
-            mf_sid = int((mf_meta.get("schema-id") or b"").decode())
-        except ValueError:
-            # a manifest without a recorded schema-id (pre-spec writers)
-            # is assumed current — the pre-evolution behavior
-            mf_sid = metadata["current-schema-id"]
-        for entry in mf_entries:
-            if entry["status"] == 2:  # DELETED entry
-                continue
-            dfile = entry["data_file"]
-            content = int(dfile.get("content") or 0)
-            # entries inherit the manifest's sequence number unless they
-            # carry their own (the spec's sequence inheritance; an EXPLICIT
-            # 0 is a real sequence number, not absence)
-            es = entry.get("sequence_number")
-            seq = mf_seq if es is None else int(es)
-            if is_delete_manifest:
-                if content == 1 and dfile.get("referenced_data_file"):
-                    # v3 DELETION VECTOR: a Puffin blob scoped to ONE data
-                    # file; decoded driver-side (size ∝ deleted rows) and
-                    # applied through the same (file, pos) anti-join as
-                    # parquet position deletes
-                    dv_deletes.append((
-                        dfile["file_path"],
-                        dfile["referenced_data_file"],
-                        int(dfile["content_offset"]),
-                        int(dfile["content_size_in_bytes"]),
-                    ))
-                    delete_rows += int(dfile.get("record_count") or 0)
-                    continue
-                if content == 1:  # position deletes: applied below
-                    delete_files.append(dfile["file_path"])
-                    delete_rows += int(dfile.get("record_count") or 0)
-                    continue
-                if content == 2:  # equality deletes: applied below
-                    ids = dfile.get("equality_ids")
-                    if not ids:
-                        raise IcebergFormatError(
-                            f"equality delete file {dfile['file_path']} "
-                            "carries no equality_ids — malformed metadata"
-                        )
-                    part = dfile.get("partition") or {}
-                    # spec scoping: a delete entry with REAL partition
-                    # values applies only to data files in that partition
-                    # (matched below via the same canonical record
-                    # encoding data files get); an all-null record is a
-                    # GLOBAL delete (what append_equality_deletes writes
-                    # without partition_scope). A foreign delete scoped to
-                    # the literal all-null partition is indistinguishable
-                    # in this encoding and is treated as global
-                    # (documented over-approximation: it can only
-                    # over-delete rows carrying the matching key values
-                    # in null partitions, never unrelated keys).
-                    scope = (
-                        _partition_record_key(part)
-                        if any(v is not None for v in part.values())
-                        else None
-                    )
-                    eq_deletes.append(
-                        (dfile["file_path"], seq, list(ids),
-                         int(dfile.get("record_count") or 0), scope)
-                    )
-                    continue
-                raise IcebergFormatError(
-                    f"DELETE manifest entry {dfile['file_path']} has "
-                    f"content={content} — malformed metadata (delete "
-                    "manifests must track content=1/2 files)"
-                )
-            if content != 0:
-                raise IcebergFormatError(
-                    f"data manifest entry {dfile['file_path']} has content="
-                    f"{content} — malformed metadata (delete files belong "
-                    "in content=1 manifests)"
-                )
-            f_first = dfile.get("first_row_id")
-            if (
-                entry["status"] == 1
-                and f_first is None
-                and mf_first is not None
-            ):
-                # spec inheritance: a null first_row_id is assigned
-                # manifest.first_row_id plus the record counts of the
-                # PRECEDING added files that were themselves assigned
-                # (null) — files carrying an explicit first_row_id do
-                # not consume from the manifest's id block
-                f_first = int(mf_first) + added_offset
-                added_offset += int(dfile.get("record_count") or 0)
-            rw = _resolved_for(mf_spec) if partition_where else []
-            if rw and any(
-                dfile.get("partition", {}).get(k) != v
-                for k, v in rw
-            ):
-                continue  # metadata-level partition pruning
-            if skip_checks:
-                lbs = {e["key"]: e["value"]
-                       for e in (dfile.get("lower_bounds") or [])}
-                ubs = {e["key"]: e["value"]
-                       for e in (dfile.get("upper_bounds") or [])}
-                if any(
-                    not _bounds_may_match(
-                        _decode_bound(t, lbs[fid]) if fid in lbs else None,
-                        _decode_bound(t, ubs[fid]) if fid in ubs else None,
-                        op, val,
-                    )
-                    for fid, t, op, val in skip_checks
-                ):
-                    continue  # bounds prove no row can match
-            files.append(dfile["file_path"])
-            file_seq[plain_path(dfile["file_path"])] = seq
-            file_first[plain_path(dfile["file_path"])] = (
-                int(f_first) if f_first is not None else None
-            )
-            file_part[plain_path(dfile["file_path"])] = (
-                _partition_record_key(dfile.get("partition") or {})
-            )
-            file_sid[dfile["file_path"]] = mf_sid
-            file_spec[dfile["file_path"]] = mf_spec
-    ice_schema = want_ice_schema
+    table_dir = Path(path)
+    # decoded path -> data sequence number / first_row_id
+    file_seq = {plain_path(e.data_file["file_path"]): e.seq for e in plan.data}
+    file_first = {
+        plain_path(e.data_file["file_path"]): e.first_row_id for e in plan.data
+    }
+    ice_schema = plan.schema
     schema = spark_schema_of(ice_schema)
     out_names = [f.name for f in schema.fields]
     lineage_fields = [
@@ -1142,6 +1216,22 @@ def read_iceberg_table(
         else schema
     )
 
+    def _with_positions(d):
+        """Each row's (file, position) when lineage needs them, plus the
+        raw-basename key for the lineage map literal (Catalyst prunes
+        _src_file's URI decode when nothing consumes it)."""
+        if not need_pos:
+            return d
+        cols = {
+            "_src_file": decoded_file_path(F.col("_metadata.file_path")),
+            "_src_pos": F.col("_metadata.row_index"),
+        }
+        if row_lineage:
+            cols["__lin_bn"] = F.substring_index(
+                F.col("_metadata.file_path"), "/", -1
+            )
+        return d.withColumns(cols)
+
     def _attach_row_lineage(d):
         """coalesce(materialized, first_row_id + pos) via
         :func:`evolution_spark.io.scan_filters.per_file_constant_columns`
@@ -1151,8 +1241,6 @@ def read_iceberg_table(
         shared with the Delta row-tracking scan)."""
         if not row_lineage or not file_seq:
             return d
-        from pyspark.sql import functions as F
-
         from evolution_spark.io.scan_filters import per_file_constant_columns
 
         per_file = [
@@ -1170,7 +1258,7 @@ def read_iceberg_table(
             ),
         })
 
-    if not files:
+    if not plan.data:
         extra: list = []
         if row_lineage:
             extra += lineage_fields
@@ -1180,90 +1268,44 @@ def read_iceberg_table(
         return spark.createDataFrame(
             [], T.StructType(schema.fields + extra) if extra else schema
         )
-    default_spec_id = int(metadata.get("default-spec-id") or 0)
     # group key = (schema epoch, partition-spec epoch): schema groups
     # realign columns by field id; SPEC groups exist because each spec's
     # files sit under a DIFFERENT hive directory layout (identity columns
     # live in dirs, not files), so one basePath discovery over mixed
     # layouts would conflict — each group scans its own consistent layout
     group_of: dict[tuple[int, int], list[str]] = {}
-    for f in files:
-        group_of.setdefault(
-            (file_sid.get(f, want_schema_id),
-             file_spec.get(f, default_spec_id)),
-            [],
-        ).append(f)
-    if set(group_of) != {(want_schema_id, default_spec_id)}:
+    for e in plan.data:
+        group_of.setdefault((e.schema_id, e.spec_id), []).append(
+            e.data_file["file_path"]
+        )
+    dels = _position_delete_frame(spark, plan.position_deletes, plan.dv_deletes)
+    default_spec_id = int(metadata.get("default-spec-id") or 0)
+    if set(group_of) != {(ice_schema["schema-id"], default_spec_id)}:
         # SCHEMA- or PARTITION-SPEC-EVOLVED READ (rename/widen/drop or a
         # repartitioned layout history): data files were written under
         # older schemas/specs. Per group: scan with the WRITTEN schema,
         # mask that group's position deletes, then realign to the wanted
-        # schema BY FIELD ID (rename -> alias, widen -> upcast, added ->
-        # null, dropped -> not selected) and union. Field-id stability is
-        # what makes this metadata-only; no file is rewritten.
-        if eq_deletes:
+        # schema by field id (_epoch_alignment) and union.
+        if plan.equality_deletes:
             raise IcebergFormatError(
                 "equality deletes over schema- or partition-spec-evolved "
                 "data files are not implemented (the anti-join would need "
                 "per-epoch resolution) — compact the table first"
             )
-        from pyspark.sql import functions as F
-
-        dels_df = _position_delete_frame(spark, delete_files, dv_deletes)
         branches = []
         for sid, spec_id in sorted(group_of):
-            g_schema = next(
-                (s for s in metadata["schemas"] if s["schema-id"] == sid),
-                None,
-            )
-            if g_schema is None:
-                raise IcebergFormatError(
-                    f"manifest references unknown schema-id {sid}"
-                )
-            g_scan = spark_schema_of(g_schema)
+            written, pairs = _epoch_alignment(metadata, ice_schema, sid)
+            g_scan = spark_schema_of(written)
             if row_lineage:
                 g_scan = T.StructType(g_scan.fields + lineage_fields)
-            gdf = (
+            gdf = _with_positions(
                 spark.read.schema(g_scan)
                 .option("basePath", str(table_dir / "data"))
                 .parquet(*group_of[(sid, spec_id)])
             )
-            if need_pos:
-                from evolution_spark.io.scan_filters import (
-                    decoded_file_path as _dfp,
-                )
-
-                gcols = {
-                    "_src_file": _dfp(F.col("_metadata.file_path")),
-                    "_src_pos": F.col("_metadata.row_index"),
-                }
-                if row_lineage:
-                    gcols["__lin_bn"] = F.substring_index(
-                        F.col("_metadata.file_path"), "/", -1
-                    )
-                gdf = gdf.withColumns(gcols)
-            if dels_df is not None:
-                from evolution_spark.io.scan_filters import (
-                    anti_join_deleted_positions,
-                )
-
-                gdf = anti_join_deleted_positions(gdf, dels_df, delete_rows)
-            g_by_id = {f["id"]: f for f in g_schema["fields"]}
-            sel = []
-            for f, sf in zip(ice_schema["fields"], schema.fields):
-                gf = g_by_id.get(f["id"])
-                if gf is None:
-                    # column added after these files were written: the
-                    # spec's v3 'Default values' reader rule — inject the
-                    # field's initial-default (null when none declared)
-                    sel.append(
-                        F.lit(decode_initial_default(f))
-                        .cast(sf.dataType).alias(f["name"])
-                    )
-                else:
-                    sel.append(
-                        F.col(gf["name"]).cast(sf.dataType).alias(f["name"])
-                    )
+            if dels is not None:
+                gdf = anti_join_deleted_positions(gdf, dels, plan.delete_rows)
+            sel = _aligned_columns(pairs)
             if row_lineage:
                 sel += [F.col(f.name) for f in lineage_fields]
                 sel += [F.col("__lin_bn")]
@@ -1274,45 +1316,27 @@ def read_iceberg_table(
         for b in branches[1:]:
             out = out.unionByName(b)
         return _attach_row_lineage(out).select(*out_names)
-    df = (
+    df = _with_positions(
         spark.read.schema(scan_schema)
         .option("basePath", str(table_dir / "data"))
-        .parquet(*files)
+        .parquet(*[e.data_file["file_path"] for e in plan.data])
     )
-    if need_pos:
-        from pyspark.sql import functions as F
-
-        from evolution_spark.io.scan_filters import decoded_file_path as _dfp
-
-        cols = {
-            "_src_file": _dfp(F.col("_metadata.file_path")),
-            "_src_pos": F.col("_metadata.row_index"),
-        }
-        if row_lineage:
-            # raw-basename key for the lineage map literal (Catalyst
-            # prunes _src_file's URI decode when nothing consumes it)
-            cols["__lin_bn"] = F.substring_index(
-                F.col("_metadata.file_path"), "/", -1
-            )
-        df = df.withColumns(cols)
-    dels = _position_delete_frame(spark, delete_files, dv_deletes)
     if dels is not None:
-        from evolution_spark.io.scan_filters import anti_join_deleted_positions
-
         # build side ~ deleted-row count (from manifest record_counts)
-        df = anti_join_deleted_positions(df, dels, delete_rows)
-    if eq_deletes:
-        from pyspark.sql import functions as F
-
-        from evolution_spark.io.scan_filters import decoded_file_path
-
+        df = anti_join_deleted_positions(df, dels, plan.delete_rows)
+    if plan.equality_deletes:
         # the spec's sequence rule: an equality delete applies only to
         # rows whose data file has a STRICTLY OLDER sequence number, so
         # rows (re-)appended after the delete survive. Attach each row's
         # file sequence via a broadcast (file -> seq) map, then anti-join
         # per distinct equality-column set with null-safe equality.
         name_of = {f["id"]: f["name"] for f in ice_schema["fields"]}
-        seq_rows = [(p, s, file_part.get(p)) for p, s in file_seq.items()]
+        part_of = {
+            plain_path(e.data_file["file_path"]):
+                _partition_record_key(e.data_file.get("partition") or {})
+            for e in plan.data
+        }
+        seq_rows = [(p, s, part_of[p]) for p, s in file_seq.items()]
         seq_df = spark.createDataFrame(
             seq_rows, "__eq_file string, __eq_seq long, __eq_part string"
         )
@@ -1324,7 +1348,7 @@ def read_iceberg_table(
             "inner",
         )
         by_ids: dict[tuple[int, ...], list[tuple[str, int, int, str | None]]] = {}
-        for dfp, dseq, ids, nrec, scope in eq_deletes:
+        for dfp, dseq, ids, nrec, scope in plan.equality_deletes:
             by_ids.setdefault(tuple(sorted(ids)), []).append(
                 (dfp, dseq, nrec, scope)
             )
@@ -1541,10 +1565,7 @@ def iceberg_table_changes(
     inner join."""
     from pyspark.sql import functions as F
 
-    from evolution_spark.io.scan_filters import (
-        anti_join_deleted_positions,  # noqa: F401 (shared-module parity)
-        decoded_file_path,
-    )
+    from evolution_spark.io.scan_filters import decoded_file_path
 
     table_dir = Path(path)
     metadata, _ = _load_metadata(table_dir)
@@ -1574,10 +1595,10 @@ def iceberg_table_changes(
     # snapshots share manifests by reference and the delete-target walk
     # re-visits them — one avro read per distinct manifest per call
 
-    def _manifest(path_str: str):
-        hit = _mf_cache.get(path_str)
+    def _manifest(p: Path):
+        hit = _mf_cache.get(str(p))
         if hit is None:
-            hit = _mf_cache[path_str] = _read_avro_with_meta(Path(path_str))
+            hit = _mf_cache[str(p)] = _read_avro_with_meta(p)
         return hit
 
     for snap in snaps[start_idx : end_idx + 1]:
@@ -1599,70 +1620,58 @@ def iceberg_table_changes(
                 "for REPLACE snapshots known row-preserving (this engine's "
                 "compactions are), or re-read the table"
             )
-        for mf in _read_avro(Path(snap["manifest-list"])):
-            if mf.get("added_snapshot_id") != sid:
-                continue  # carried by reference from an earlier snapshot
-            is_delete_manifest = int(mf.get("content") or 0) == 1
-            mf_entries, mf_meta = _manifest(mf["manifest_path"])
-            try:
-                mf_sid = int((mf_meta.get("schema-id") or b"").decode())
-            except ValueError:
-                mf_sid = metadata["current-schema-id"]
-            for entry in mf_entries:
-                if entry["status"] == 2:
-                    # a file REMOVAL inside an append/delete snapshot is a
-                    # rewrite in disguise — same non-derivable diff
+        # manifests carried by reference from an earlier snapshot are
+        # not this snapshot's change and are never read
+        for e in _manifest_entries(
+            metadata, snap, read=_manifest,
+            keep=lambda mf, sid=sid: mf.get("added_snapshot_id") == sid,
+        ):
+            fp = e.data_file["file_path"]
+            if e.status == 2:
+                # a file REMOVAL inside an append/delete snapshot is a
+                # rewrite in disguise — same non-derivable diff
+                raise IcebergFormatError(
+                    f"snapshot {sid} removes data file {fp}; its row-level "
+                    "diff is not derivable from metadata"
+                )
+            if e.status != 1:  # only files ADDED by this snapshot
+                continue
+            content = int(e.data_file.get("content") or 0)
+            if _manifest_content(e.manifest) == 1:
+                if content == 2:
                     raise IcebergFormatError(
-                        f"snapshot {sid} removes data file "
-                        f"{entry['data_file']['file_path']}; its row-level "
-                        "diff is not derivable from metadata"
+                        f"delete file {fp} carries EQUALITY deletes "
+                        "(content=2); the change feed cannot recover "
+                        "their rows — refusing rather than emitting an "
+                        "incomplete change set"
                     )
-                if entry["status"] != 1:  # only files ADDED by this snapshot
-                    continue
-                dfile = entry["data_file"]
-                fp = dfile["file_path"]
-                content = int(dfile.get("content") or 0)
-                if is_delete_manifest:
-                    if content == 2:
-                        raise IcebergFormatError(
-                            f"delete file {fp} carries EQUALITY deletes "
-                            "(content=2); the change feed cannot recover "
-                            "their rows — refusing rather than emitting an "
-                            "incomplete change set"
-                        )
-                    if dfile.get("referenced_data_file"):
-                        raise IcebergFormatError(
-                            f"delete file {fp} is a v3 DELETION VECTOR; "
-                            "the change feed cannot diff merged vectors "
-                            "across snapshots yet — refusing rather than "
-                            "emitting an incomplete change set"
-                        )
-                    if content != 1:
-                        raise IcebergFormatError(
-                            f"DELETE manifest entry {fp} has content="
-                            f"{content} — malformed metadata"
-                        )
-                    delete_files.append((fp, sid))
-                else:
-                    insert_files.append((plain_path(fp), sid, mf_sid))
+                if e.data_file.get("referenced_data_file"):
+                    raise IcebergFormatError(
+                        f"delete file {fp} is a v3 DELETION VECTOR; "
+                        "the change feed cannot diff merged vectors "
+                        "across snapshots yet — refusing rather than "
+                        "emitting an incomplete change set"
+                    )
+                if content != 1:
+                    raise IcebergFormatError(
+                        f"DELETE manifest entry {fp} has content="
+                        f"{content} — malformed metadata"
+                    )
+                delete_files.append((fp, sid))
+            else:
+                insert_files.append((plain_path(fp), sid, e.schema_id))
         if any(s == sid for _, s in delete_files):
             # a delete snapshot's TARGET data files may predate a later
             # rename/widen: record each live data file's WRITTEN schema
             # id so the delete-row recovery below reads pre-evolution
             # files with pre-evolution names/types (metadata-sized; only
             # delete snapshots walk their full manifest list)
-            for mf in _read_avro(Path(snap["manifest-list"])):
-                if int(mf.get("content") or 0) != 0:
-                    continue
-                t_entries, t_meta = _manifest(mf["manifest_path"])
-                try:
-                    t_sid = int((t_meta.get("schema-id") or b"").decode())
-                except ValueError:
-                    t_sid = metadata["current-schema-id"]
-                for entry in t_entries:
-                    if entry["status"] == 2:
-                        continue
-                    target_sid[plain_path(entry["data_file"]["file_path"])] = t_sid
+            for e in _manifest_entries(
+                metadata, snap, read=_manifest,
+                keep=lambda mf: _manifest_content(mf) == 0,
+            ):
+                if e.status != 2:
+                    target_sid[plain_path(e.data_file["file_path"])] = e.schema_id
 
     ice_schema = next(
         s for s in metadata["schemas"] if s["schema-id"] == metadata["current-schema-id"]
@@ -1678,16 +1687,9 @@ def iceberg_table_changes(
         (__chg_fp[, __chg_ri]) physical columns."""
         branches = []
         for gsid in sorted(files_by_sid):
-            g_schema = next(
-                (s for s in metadata["schemas"] if s["schema-id"] == gsid),
-                None,
-            )
-            if g_schema is None:
-                raise IcebergFormatError(
-                    f"manifest references unknown schema-id {gsid}"
-                )
+            written, pairs = _epoch_alignment(metadata, ice_schema, gsid)
             gdf = (
-                spark.read.schema(spark_schema_of(g_schema))
+                spark.read.schema(spark_schema_of(written))
                 .option("basePath", str(table_dir / "data"))
                 .parquet(*sorted(files_by_sid[gsid]))
             )
@@ -1695,23 +1697,9 @@ def iceberg_table_changes(
             if tag:
                 cols["__chg_ri"] = F.col("_metadata.row_index")
             gdf = gdf.withColumns(cols)
-            g_by_id = {f["id"]: f for f in g_schema["fields"]}
-            sel = []
-            for f, sf in zip(ice_schema["fields"], schema.fields):
-                gf = g_by_id.get(f["id"])
-                if gf is None:
-                    # added after these files were written: inject the
-                    # v3 initial-default (null when none declared)
-                    sel.append(
-                        F.lit(decode_initial_default(f))
-                        .cast(sf.dataType).alias(f["name"])
-                    )
-                else:
-                    sel.append(
-                        F.col(gf["name"]).cast(sf.dataType).alias(f["name"])
-                    )
-            sel += [F.col(c) for c in cols]
-            branches.append(gdf.select(*sel))
+            branches.append(
+                gdf.select(*_aligned_columns(pairs), *[F.col(c) for c in cols])
+            )
         out = branches[0]
         for b in branches[1:]:
             out = out.unionByName(b)
@@ -2223,20 +2211,17 @@ def _current_schema_and_guards(path: str, col: str, op: str):
         snap = next(
             s for s in metadata["snapshots"] if s["snapshot-id"] == snap_id
         )
-        for mf in _read_avro(Path(snap["manifest-list"])):
-            if int(mf.get("content") or 0) != 1:
-                continue
-            for entry in _read_avro(Path(mf["manifest_path"])):
-                if entry["status"] == 2:
-                    continue
-                if int(entry["data_file"].get("content") or 0) == 2:
-                    raise ValueError(
-                        f"cannot {op} column {col!r} while EQUALITY deletes "
-                        "are live (the evolved read cannot resolve delete-"
-                        "file columns across schema epochs) — run "
-                        "compact_iceberg_table(path) first to materialize "
-                        "them, then evolve"
-                    )
+        for e in _manifest_entries(
+            metadata, snap, keep=lambda mf: _manifest_content(mf) == 1
+        ):
+            if e.status != 2 and int(e.data_file.get("content") or 0) == 2:
+                raise ValueError(
+                    f"cannot {op} column {col!r} while EQUALITY deletes "
+                    "are live (the evolved read cannot resolve delete-"
+                    "file columns across schema epochs) — run "
+                    "compact_iceberg_table(path) first to materialize "
+                    "them, then evolve"
+                )
     return metadata, current, by_name
 
 
@@ -2495,27 +2480,26 @@ def _live_dv_positions(metadata: dict) -> dict[str, set[int]]:
         if s["snapshot-id"] == metadata["current-snapshot-id"]
     )
     merged: dict[str, set[int]] = {}
-    for mf in _read_avro(Path(snapshot["manifest-list"])):
-        if int(mf.get("content") or 0) != 1:
+    for e in _manifest_entries(
+        metadata, snapshot, keep=lambda mf: _manifest_content(mf) == 1
+    ):
+        if e.status == 2:
             continue
-        for entry in _read_avro(Path(mf["manifest_path"])):
-            if entry["status"] == 2:
-                continue
-            dfile = entry["data_file"]
-            if not dfile.get("referenced_data_file"):
-                raise IcebergFormatError(
-                    f"table carries a non-DV delete file "
-                    f"{dfile['file_path']} — refusing to supersede delete "
-                    "state this commit cannot merge"
-                )
-            positions = read_puffin_dv(
-                dfile["file_path"],
-                int(dfile["content_offset"]),
-                int(dfile["content_size_in_bytes"]),
+        dfile = e.data_file
+        if not dfile.get("referenced_data_file"):
+            raise IcebergFormatError(
+                f"table carries a non-DV delete file "
+                f"{dfile['file_path']} — refusing to supersede delete "
+                "state this commit cannot merge"
             )
-            merged.setdefault(
-                plain_path(dfile["referenced_data_file"]), set()
-            ).update(int(p) for p in positions)
+        positions = read_puffin_dv(
+            dfile["file_path"],
+            int(dfile["content_offset"]),
+            int(dfile["content_size_in_bytes"]),
+        )
+        merged.setdefault(
+            plain_path(dfile["referenced_data_file"]), set()
+        ).update(int(p) for p in positions)
     return merged
 
 
@@ -3484,11 +3468,10 @@ def expire_iceberg_snapshots(
 
     def files_of(snapshot) -> tuple[set[str], set[str]]:
         data, meta_files = set(), {snapshot["manifest-list"]}
-        for mf in _read_avro(Path(snapshot["manifest-list"])):
-            meta_files.add(mf["manifest_path"])
-            for entry in _read_avro(Path(mf["manifest_path"])):
-                if entry["status"] != 2:
-                    data.add(entry["data_file"]["file_path"])
+        for e in _manifest_entries(metadata, snapshot):
+            meta_files.add(e.manifest["manifest_path"])
+            if e.status != 2:
+                data.add(e.data_file["file_path"])
         return data, meta_files
 
     # Publish-then-delete ordering (matches Iceberg's RemoveSnapshots): the
@@ -3983,28 +3966,28 @@ def iceberg_metadata_table(spark, path: str, kind: str) -> DataFrame:
         snap = next(
             s for s in metadata["snapshots"] if s["snapshot-id"] == current
         )
-        mrows = []
+        mrows: dict[str, list] = {}  # manifest path -> its row
         frows = []
-        for mf in _read_avro(Path(snap["manifest-list"])):
-            entries = _read_avro(Path(mf["manifest_path"]))
-            live = [e for e in entries if e["status"] != 2]
-            mrows.append((
-                mf["manifest_path"], int(mf.get("content") or 0),
-                int(mf.get("partition_spec_id") or 0),
-                int(mf.get("sequence_number") or 0), len(live),
+        for e in _manifest_entries(metadata, snap):
+            mpath = e.manifest["manifest_path"]
+            mrow = mrows.setdefault(mpath, [
+                mpath, _manifest_content(e.manifest), e.spec_id,
+                int(e.manifest.get("sequence_number") or 0), 0,
+            ])
+            if e.status == 2:
+                continue
+            mrow[-1] += 1  # live entries
+            d = e.data_file
+            frows.append((
+                int(d.get("content") or 0), d["file_path"],
+                int(d.get("record_count") or 0),
+                int(d.get("file_size_in_bytes") or 0),
+                _partition_record_key(d.get("partition") or {}),
+                e.spec_id,
             ))
-            for e in live:
-                d = e["data_file"]
-                frows.append((
-                    int(d.get("content") or 0), d["file_path"],
-                    int(d.get("record_count") or 0),
-                    int(d.get("file_size_in_bytes") or 0),
-                    _partition_record_key(d.get("partition") or {}),
-                    int(mf.get("partition_spec_id") or 0),
-                ))
         if kind == "manifests":
             return spark.createDataFrame(
-                mrows,
+                [tuple(r) for r in mrows.values()],
                 "manifest_path string, content int, spec_id int, "
                 "sequence_number long, n_entries int",
             )

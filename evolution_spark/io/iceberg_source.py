@@ -15,13 +15,20 @@ POSITION DELETES directly to the Arrow batches (the delete files'
 compact roaring bitmap — the same `_FileSlice`/`_read_slice` machinery as
 the Delta source, so a masking fix lands once). Identity-partition values
 come TYPED from the manifest entries (never re-parsed from paths).
-Equality deletes refuse loudly, as everywhere in this engine.
+Equality deletes refuse loudly (``read_iceberg_table`` applies them).
 
 Options: ``snapshot`` (time travel by snapshot id), ``partition.<col>``
 (metadata-level partition pruning, e.g. ``.option("partition.p", "1")`` —
-the DataSource API has no pushdown hook for arbitrary predicates, so the
-same equality pruning read_iceberg_table does via ``partition_where`` is
-exposed as options)."""
+the DataSource API has no pushdown hook for arbitrary predicates, so
+pruning is exposed as options and handed to the scan planner as
+``partition_where``).
+
+Both this source and ``read_iceberg_table`` plan through
+``iceberg_meta._plan_scan`` — one manifest walk deciding the data files,
+deletes, schema epochs and refusals — and realign older schema epochs
+with the same ``iceberg_meta._epoch_alignment``, so the two readers see
+the same rows and refuse the same tables with the same messages
+(equality deletes aside)."""
 
 from __future__ import annotations
 
@@ -48,137 +55,52 @@ def _plan_iceberg_slices(
     table_path: str, snapshot_id=None, partition_where=None,
     use_current_schema=False,
 ):
-    """Driver-side: manifest walk -> (spark schema, slices). Position
-    deletes are read with pyarrow (driver-side — delete files are the
-    changed-row set, metadata-sized) and grouped per target data file."""
+    """Driver-side: (spark schema, slices) from the scan plan
+    ``read_iceberg_table`` uses too (``iceberg_meta._plan_scan``: the
+    refusals, per-spec ``partition_where`` resolution with option values
+    coerced by the spec's types, and the wanted schema), realigned per
+    schema epoch by the same ``_epoch_alignment``. Equality deletes
+    refuse. Position deletes are read with pyarrow (driver-side — delete
+    files are the changed-row set, metadata-sized) and grouped per target
+    data file."""
     import numpy as np
     import pyarrow.parquet as papq
 
     from evolution_spark.io.deletion_vectors import serialize_roaring64
     from evolution_spark.io.iceberg_meta import (
         IcebergFormatError,
-        _load_metadata,
-        _read_avro,
+        _epoch_alignment,
+        _plan_scan,
+        decode_initial_default,
         spark_schema_of,
     )
-
-    table_dir = Path(table_path)
-    metadata, _ = _load_metadata(table_dir)
-    current = (
-        snapshot_id if snapshot_id is not None else metadata["current-snapshot-id"]
-    )
-    try:
-        snapshot = next(
-            s for s in metadata["snapshots"] if s["snapshot-id"] == current
-        )
-    except StopIteration:
-        known = [s["snapshot-id"] for s in metadata["snapshots"]]
-        raise ValueError(f"snapshot {current} not in table history {known}")
-
-    specs_by_id = {
-        sp["spec-id"]: sp["fields"]
-        for sp in metadata.get("partition-specs") or []
-    }
-    resolved_by_spec: dict[int, list | None] = {}
-    if partition_where:
-        # option values arrive stringly; the shared resolver coerces by
-        # the SPEC's types (int-guessing would silently prune everything
-        # on string/date partitions), applies transforms to SOURCE-column
-        # literals, and rejects unknown keys loudly — a typo'd key would
-        # otherwise prune ALL files into an empty result
-        from evolution_spark.io.iceberg_transforms import (
-            resolve_partition_where,
-        )
-
-        if not specs_by_id:
-            raise IcebergFormatError(
-                "metadata declares no partition-specs — cannot resolve "
-                "partition options against a spec-less table"
-            )
-        cur_schema = next(
-            s for s in metadata["schemas"]
-            if s["schema-id"] == metadata["current-schema-id"]
-        )
-        # per-SPEC resolution: a key only SOME spec epochs can express
-        # prunes exactly those epochs' manifests; a key NO spec resolves
-        # is a typo and raises (same rule as read_iceberg_table)
-        last_err = None
-        for sid, sp_fields in specs_by_id.items():
-            try:
-                resolved_by_spec[sid] = resolve_partition_where(
-                    partition_where, sp_fields, cur_schema["fields"],
-                    stringly=True,
-                )
-            except (ValueError, KeyError) as e:
-                resolved_by_spec[sid] = None
-                last_err = e
-        if last_err is not None and all(
-            v is None for v in resolved_by_spec.values()
-        ):
-            raise last_err
-
-        def _resolved_for(sid: int):
-            return resolved_by_spec.get(sid)
-    else:
-        def _resolved_for(sid: int):
-            return []
-
-    data_entries: list[tuple[dict, int]] = []  # (data_file, schema-id)
-    delete_files: list[str] = []
-    dv_entries: list[dict] = []  # v3 Puffin deletion-vector placements
-    from evolution_spark.io.iceberg_meta import _read_avro_with_meta
-
-    for mf in _read_avro(Path(snapshot["manifest-list"])):
-        is_delete_manifest = int(mf.get("content") or 0) == 1
-        mf_spec = int(mf.get("partition_spec_id") or 0)
-        mf_entries, mf_meta = _read_avro_with_meta(Path(mf["manifest_path"]))
-        try:
-            mf_sid = int((mf_meta.get("schema-id") or b"").decode())
-        except ValueError:
-            mf_sid = metadata["current-schema-id"]
-        for entry in mf_entries:
-            if entry["status"] == 2:
-                continue
-            dfile = entry["data_file"]
-            content = int(dfile.get("content") or 0)
-            if is_delete_manifest:
-                if content == 1 and dfile.get("referenced_data_file"):
-                    # v3 deletion vector: Puffin blob scoped to ONE data
-                    # file (round 10 — was read as parquet and crashed)
-                    dv_entries.append(dfile)
-                    continue
-                if content == 1:
-                    delete_files.append(dfile["file_path"])
-                    continue
-                raise IcebergFormatError(
-                    f"delete file {dfile['file_path']} carries content="
-                    f"{content}; position deletes only"
-                )
-            rw = _resolved_for(mf_spec) if partition_where else []
-            if rw and any(
-                dfile.get("partition", {}).get(k) != v
-                for k, v in rw
-            ):
-                continue
-            data_entries.append((dfile, mf_sid))
-
     from evolution_spark.io.scan_filters import plain_path
 
+    plan = _plan_scan(
+        table_path, snapshot_id, partition_where,
+        current_schema=use_current_schema, stringly=True,
+    )
+    if plan.equality_deletes:
+        raise IcebergFormatError(
+            f"delete file {plan.equality_deletes[0][0]} carries content=2; "
+            "position deletes only"
+        )
     # key deleted positions by the NORMALIZED path: delete files may
     # record targets as plain paths or URIs (read_iceberg_table handles
     # the same ambiguity scan-side) — raw-string keying would silently
     # resurrect every deleted row of a URI-recorded target
     pos_by_file: dict[str, list[int]] = {}
-    for dfp in delete_files:
-        t = papq.read_table(dfp, columns=["file_path", "pos"])
+    for e in plan.position_deletes:
+        t = papq.read_table(e.data_file["file_path"], columns=["file_path", "pos"])
         for fp, pos in zip(
             t.column("file_path").to_pylist(), t.column("pos").to_pylist()
         ):
             pos_by_file.setdefault(plain_path(fp), []).append(int(pos))
-    if dv_entries:
+    if plan.dv_deletes:
         from evolution_spark.io.puffin import read_puffin_dv
 
-        for d in dv_entries:
+        for e in plan.dv_deletes:
+            d = e.data_file
             pos_by_file.setdefault(
                 plain_path(d["referenced_data_file"]), []
             ).extend(int(p) for p in read_puffin_dv(
@@ -186,61 +108,34 @@ def _plan_iceberg_slices(
                 int(d["content_size_in_bytes"]),
             ))
 
-    # current read: CURRENT schema (metadata-only evolution creates no
-    # snapshot); time travel: the snapshot's recorded schema.
-    # use_current_schema: the STREAM's initial snapshot pins the file
-    # list by snapshot id but its read() projects with the pinned CURRENT
-    # schema — resolving renames against the old schema would emit the
-    # renamed column as all-null
-    if snapshot_id is None or use_current_schema:
-        sid = metadata["current-schema-id"]
-    else:
-        sid = snapshot.get("schema-id", metadata["current-schema-id"])
-        if sid is None:
-            sid = metadata["current-schema-id"]
-    ice_schema = next(
-        s for s in metadata["schemas"] if s["schema-id"] == sid
-    )
-    schema = spark_schema_of(ice_schema)
-    # per-schema-group physical->logical renames (rename evolution): a
-    # file written under an older schema stores the OLD column names;
-    # field-id stability maps them to the wanted names. Widened types are
-    # upcast executor-side in _read_slice.
-    want_by_id = {f["id"]: f["name"] for f in ice_schema["fields"]}
-    renames_of: dict[int, dict[str, str]] = {}
+    # per schema epoch: physical->logical renames (widened types are
+    # upcast executor-side in _read_slice) and the initial-defaults of
+    # columns added after the files were written, injected through the
+    # same typed-constant mechanism as partition values (real partition
+    # values take precedence in the merge below)
+    renames_of: dict[int, dict[str, str | None]] = {}
     defaults_of: dict[int, dict[str, object]] = {}
-    for g in {g for _, g in data_entries}:
-        if g == sid:
-            renames_of[g] = {}
-            defaults_of[g] = {}
-            continue
-        g_schema = next(
-            (s for s in metadata["schemas"] if s["schema-id"] == g), None
-        )
-        if g_schema is None:
-            from evolution_spark.io.iceberg_meta import IcebergFormatError
-
-            raise IcebergFormatError(f"manifest references unknown schema-id {g}")
+    for g in {e.schema_id for e in plan.data}:
+        written, pairs = _epoch_alignment(plan.metadata, plan.schema, g)
         renames_of[g] = {
-            f["name"]: want_by_id[f["id"]]
-            for f in g_schema["fields"]
-            if f["id"] in want_by_id and f["name"] != want_by_id[f["id"]]
+            gf["name"]: f["name"]
+            for f, gf in pairs if gf is not None and gf["name"] != f["name"]
         }
-        # v3 'Default values': columns added AFTER these files were
-        # written read their initial-default — injected through the same
-        # typed-constant mechanism as partition values (real partition
-        # values take precedence in the merge below)
-        from evolution_spark.io.iceberg_meta import decode_initial_default
-
-        g_ids = {f["id"] for f in g_schema["fields"]}
+        # a written column no wanted field claims was dropped; renaming
+        # it to None keeps a later column re-added under its name from
+        # reading the dropped values
+        claimed = {gf["id"] for _, gf in pairs if gf is not None}
+        renames_of[g].update({
+            w["name"]: None for w in written["fields"] if w["id"] not in claimed
+        })
         defaults_of[g] = {
             f["name"]: decode_initial_default(f)
-            for f in ice_schema["fields"]
-            if f["id"] not in g_ids and f.get("initial-default") is not None
+            for f, gf in pairs
+            if gf is None and f.get("initial-default") is not None
         }
     slices = []
-    for dfile, g in sorted(data_entries, key=lambda d: d[0]["file_path"]):
-        fp = dfile["file_path"]
+    for e in sorted(plan.data, key=lambda e: e.data_file["file_path"]):
+        fp = e.data_file["file_path"]
         pos = pos_by_file.get(plain_path(fp))
         blob = (
             serialize_roaring64(np.asarray(sorted(set(pos)), dtype=np.uint64))
@@ -250,11 +145,12 @@ def _plan_iceberg_slices(
         slices.append(
             _FileSlice(
                 fp, blob,
-                {**defaults_of[g], **dict(dfile.get("partition") or {})},
-                renames_of[g],
+                {**defaults_of[e.schema_id],
+                 **dict(e.data_file.get("partition") or {})},
+                renames_of[e.schema_id],
             )
         )
-    return schema, slices
+    return spark_schema_of(plan.schema), slices
 
 
 class _IcebergBatchReader(DataSourceReader):
@@ -266,7 +162,10 @@ class _IcebergBatchReader(DataSourceReader):
         return self.slices
 
     def read(self, partition):
-        yield from _read_slice(partition, self.schema_json)
+        # a plan with no files (everything pruned) reaches the reader as
+        # Spark's single None partition
+        if partition is not None:
+            yield from _read_slice(partition, self.schema_json)
 
 
 class EvolutionIcebergDataSource(DataSource):
@@ -376,7 +275,10 @@ class _IcebergStreamReader(DataSourceStreamReader):
         }
 
     def partitions(self, start, end):
-        from evolution_spark.io.iceberg_meta import _read_avro
+        from evolution_spark.io.iceberg_meta import (
+            _manifest_content,
+            _manifest_entries,
+        )
 
         metadata = self._metadata()
         if metadata["current-schema-id"] != self._pinned_schema_id:
@@ -420,22 +322,20 @@ class _IcebergStreamReader(DataSourceStreamReader):
                     "deletion/rewrites — set ignoreChanges=true to skip, "
                     "or consume iceberg_table_changes() instead"
                 )
-            sid = snap["snapshot-id"]
-            for mf in _read_avro(Path(snap["manifest-list"])):
-                if mf.get("added_snapshot_id") != sid:
-                    continue
-                if int(mf.get("content") or 0) != 0:
-                    continue  # delete manifests can't appear in appends
-                for entry in _read_avro(Path(mf["manifest_path"])):
-                    if entry["status"] != 1:
-                        continue
-                    dfile = entry["data_file"]
-                    out.append(
-                        _FileSlice(
-                            dfile["file_path"], None,
-                            dict(dfile.get("partition") or {}), {},
-                        )
-                    )
+            # only the data manifests this append added are read
+            # (delete manifests can't appear in appends)
+            for e in _manifest_entries(
+                metadata, snap,
+                keep=lambda mf, sid=snap["snapshot-id"]: (
+                    mf.get("added_snapshot_id") == sid
+                    and _manifest_content(mf) == 0
+                ),
+            ):
+                if e.status == 1:
+                    out.append(_FileSlice(
+                        e.data_file["file_path"], None,
+                        dict(e.data_file.get("partition") or {}), {},
+                    ))
         return out
 
     def read(self, partition):

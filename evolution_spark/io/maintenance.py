@@ -94,8 +94,8 @@ def table_health(path: str) -> dict:
     elif (table_dir / "metadata").exists():
         from evolution_spark.io.iceberg_meta import (
             _load_metadata,
-            _read_avro,
-            _read_avro_with_meta,
+            _manifest_content,
+            _manifest_entries,
         )
 
         fmt = "iceberg"
@@ -109,21 +109,17 @@ def table_health(path: str) -> dict:
                 s for s in metadata["snapshots"]
                 if s["snapshot-id"] == current
             )
-            for mf in _read_avro(Path(snap["manifest-list"])):
-                is_delete = int(mf.get("content") or 0) == 1
-                entries, _ = _read_avro_with_meta(Path(mf["manifest_path"]))
-                for e in entries:
-                    if e["status"] == 2:
-                        continue
-                    dfile = e["data_file"]
-                    n = int(dfile.get("record_count") or 0)
-                    if is_delete:
-                        deleted += n
-                    else:
-                        total_rows += n
-                        sizes.append(
-                            int(dfile.get("file_size_in_bytes") or 0)
-                        )
+            for e in _manifest_entries(metadata, snap):
+                if e.status == 2:
+                    continue
+                n = int(e.data_file.get("record_count") or 0)
+                if _manifest_content(e.manifest) == 1:
+                    deleted += n
+                else:
+                    total_rows += n
+                    sizes.append(
+                        int(e.data_file.get("file_size_in_bytes") or 0)
+                    )
         stale = max(0, len(metadata.get("snapshots") or []) - 1)
         fix = "compact_iceberg_table(spark, path)"
         expire_fix = "expire_iceberg_snapshots(path, keep=N)"

@@ -43,9 +43,11 @@ def test_expire_noop_and_guards(spark, tmp_path):
 
 
 def test_iceberg_reader_format_guard(spark, tmp_path):
-    """Spec forward-compat: refuse format-version 3 tables and snapshots
-    carrying row-level DELETE manifests instead of silently resurrecting
-    deleted rows (the Iceberg twin of the Delta protocol guard)."""
+    """Spec forward-compat: both readers — ``read_iceberg_table`` and the
+    ``evolution_iceberg`` DataSource — refuse format-version 4 tables and
+    malformed manifests with the same IcebergFormatError message instead
+    of silently resurrecting deleted rows (the Iceberg twin of the Delta
+    protocol guard)."""
     import json as _json
     import pathlib
 
@@ -54,17 +56,32 @@ def test_iceberg_reader_format_guard(spark, tmp_path):
 
     from evolution_spark.io.iceberg_meta import (
         IcebergFormatError,
+        _load_metadata,
         _read_avro,
         _write_avro,
+        append_position_deletes,
         read_iceberg_table,
         write_iceberg_table,
         _MANIFEST_LIST_SCHEMA,
     )
+    from evolution_spark.io.iceberg_source import register_iceberg_source
+    from tests.test_iceberg_deletes import _positions_of
+
+    register_iceberg_source(spark)
+
+    def refused(path, match):
+        """Both readers raise IcebergFormatError with one message."""
+        with pytest.raises(IcebergFormatError, match=match) as lib:
+            read_iceberg_table(spark, path)
+        with pytest.raises(Exception) as src:
+            spark.read.format("evolution_iceberg").load(path).collect()
+        assert f"IcebergFormatError: {lib.value}" in str(src.value)
 
     path = str(tmp_path / "iceguard")
     df = spark.range(10).select(F.col("id").alias("k"))
     write_iceberg_table(df, path)
     assert read_iceberg_table(spark, path).count() == 10
+    assert spark.read.format("evolution_iceberg").load(path).count() == 10
 
     meta_dir = pathlib.Path(path) / "metadata"
     hint = (meta_dir / "version-hint.text").read_text().strip()
@@ -76,8 +93,7 @@ def test_iceberg_reader_format_guard(spark, tmp_path):
     # forward-compat guard now bites at 4)
     v4 = dict(metadata, **{"format-version": 4})
     meta_file.write_text(_json.dumps(v4))
-    with pytest.raises(IcebergFormatError, match="format-version 4"):
-        read_iceberg_table(spark, path)
+    refused(path, "format-version 4")
     meta_file.write_text(_json.dumps(metadata))  # restore
 
     # a foreign v2 writer adds a DELETE manifest whose tracked file is a
@@ -91,8 +107,21 @@ def test_iceberg_reader_format_guard(spark, tmp_path):
     del_entry["content"] = 1  # DELETES manifest pointing at a data manifest
     _write_avro(mlist, _MANIFEST_LIST_SCHEMA, entries + [del_entry],
                 meta={"format-version": "2"})
-    with pytest.raises(IcebergFormatError, match="malformed"):
-        read_iceberg_table(spark, path)
+    refused(path, "malformed")
+
+    # the reverse: a DATA manifest (manifest-list content=0) tracking a
+    # position-delete file — read as data it would add a NULL-keyed row
+    # and bring the deleted row back
+    relabelled = str(tmp_path / "iceguard_relabelled")
+    write_iceberg_table(df, relabelled)
+    append_position_deletes(relabelled, _positions_of(spark, relabelled, "k = 3"))
+    assert read_iceberg_table(spark, relabelled).count() == 9
+    md, _ = _load_metadata(pathlib.Path(relabelled))
+    mlist = pathlib.Path(md["snapshots"][-1]["manifest-list"])
+    entries = [dict(mf, content=0) for mf in _read_avro(mlist)]
+    _write_avro(mlist, _MANIFEST_LIST_SCHEMA, entries,
+                meta={"format-version": "2"})
+    refused(relabelled, "data manifest entry .* has content=1 — malformed")
 
 
 def test_iceberg_partition_pruned_read(spark, tmp_path):
